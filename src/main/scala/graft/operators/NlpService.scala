@@ -1,12 +1,12 @@
 package graft.operators
 
-import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.{HttpURLConnection, Proxy, URI, URL}
 import java.nio.charset.StandardCharsets
-import java.time.Duration
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.JsonUtil
 
 /** U1 — the reference's single external-effect operator: POST document text
   * to an NLP REST service and parse the returned annotations
@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  - the effect lives in `mapPartitions`, NOT a Catalyst expression (it is
   *    side-effecting and non-deterministic — exactly what Catalyst must not
   *    reorder or re-execute freely);
-  *  - one pooled HTTP client per partition (the reference opens a session per
-  *    request; at 100 TB that is millions of TCP handshakes);
+  *  - keep-alive connections pooled JVM-wide (the reference opens a session
+  *    per request; at 100 TB that is millions of TCP handshakes): see
+  *    [[HttpTagger]];
   *  - bounded retries per document (reference `max-retries-on-failure`,
   *    `ingester/nlp_service.py:75-92`) with failures captured in an error
   *    column (`Either`-style) instead of aborting the task — the reference's
@@ -86,6 +87,22 @@ object NlpService {
     * `maxRetries` (reference `:75-92`). The JSON parsing is left minimal on
     * purpose — hermetic tests use [[MockTagger]]; this class carries the
     * production plumbing (pooling, timeout, retry).
+    *
+    * Each request is one blocking HTTP/1.1 POST through `HttpURLConnection`,
+    * whose keep-alive cache is JVM-wide: every task on an executor reuses
+    * the same idle connections to the endpoint (the JDK keeps up to
+    * `http.maxConnections` per destination, default 5). A client held in a
+    * field would instead be rebuilt, with new connections, by every task
+    * that deserializes the tagger. The body is buffered, so headers and
+    * body leave in one write; fixed-length or chunked streaming mode writes
+    * them separately and costs about a millisecond per request on loopback.
+    * A connection returns to the cache only when its response body, or
+    * error body, is read to the end and closed, so the tagger always does
+    * both and never calls `disconnect()`. When a pooled connection turns
+    * out to be stale, the JDK re-sends the POST once on a fresh one without
+    * counting it as an attempt; an annotate call is idempotent, so that is
+    * harmless here. `EsRest` keeps `java.net.http` for this reason: a
+    * re-sent `_search/scroll` continuation could skip a page.
     */
   final class HttpTagger(
       endpoint: String,
@@ -94,21 +111,18 @@ object NlpService {
       applicationParams: Map[String, String] = Map.empty,
       parse: String => Seq[Annotation]) extends Tagger {
 
-    @transient private lazy val client: HttpClient =
-      HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
+    private val url: URL = URI.create(endpoint).toURL
+    // MedCAT request shape (`nlp_service.py:57-65`): content + app params
+    private val paramsJson: String = applicationParams
+      .map { case (k, v) => s"${JsonUtil.quote(k)}:${JsonUtil.quote(v)}" }
+      .mkString("{", ",", "}")
 
     override def annotate(doc: Doc): Seq[Annotation] = {
-      // MedCAT request shape (`nlp_service.py:57-65`): content + app params
-      val params = applicationParams
-        .map { case (k, v) => s"${quoteJson(k)}:${quoteJson(v)}" }
-        .mkString("{", ",", "}")
-      val body =
-        s"""{"content":{"text":${quoteJson(doc.text)}},"application_params":$params}"""
-      val req = HttpRequest.newBuilder(URI.create(endpoint))
-        .timeout(Duration.ofSeconds(timeoutSec))
-        .header("Content-Type", "application/json")
-        .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
-        .build()
+      val sb = new StringBuilder(doc.text.length + paramsJson.length + 64)
+      sb.append("""{"content":{"text":""")
+      JsonUtil.quoteInto(sb, doc.text)
+      sb.append("""},"application_params":""").append(paramsJson).append('}')
+      val body = sb.result().getBytes(StandardCharsets.UTF_8)
       var attempt = 0
       var result: Option[Seq[Annotation]] = None
       var lastError: String = "non-200 response"
@@ -118,17 +132,33 @@ object NlpService {
         // retry budget like non-200s — the reference retries on any failure
         // (`nlp_service.py:75-92`)
         try {
-          val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-          if (resp.statusCode() == 200) result = Some(parse(resp.body()))
-          else lastError = s"HTTP ${resp.statusCode()}"
+          val (code, resp) = post(body)
+          if (code == 200) result = Some(parse(resp))
+          else lastError = s"HTTP $code"
         } catch { case e: java.io.IOException => lastError = e.toString }
       }
       result.getOrElse(throw new RuntimeException(
         s"NLP service failed after $attempt attempts for doc ${doc.doc_id}: $lastError"))
     }
-  }
 
-  private def quoteJson(s: String): String = graft.functions.JsonUtil.quote(s)
+    private def post(body: Array[Byte]): (Int, String) = {
+      val conn = url.openConnection(Proxy.NO_PROXY).asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("POST")
+      conn.setInstanceFollowRedirects(false)
+      conn.setConnectTimeout(10000)
+      conn.setReadTimeout(Math.toIntExact(timeoutSec * 1000))
+      conn.setDoOutput(true)
+      conn.setRequestProperty("Content-Type", "application/json")
+      val out = conn.getOutputStream
+      try out.write(body) finally out.close()
+      val code = conn.getResponseCode
+      val in = if (code >= 400) conn.getErrorStream else conn.getInputStream
+      val resp =
+        if (in == null) ""
+        else try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+      (code, resp)
+    }
+  }
 
   /** The operator: Dataset[Doc] → Dataset[Annotated] via mapPartitions.
     * Per-document failures become `error` values (B4 isolation); the task

@@ -53,7 +53,10 @@ object EsRest {
       maxRetries: Int = 4,
       retryBackoffMs: Long = 50)
 
-  // one client per JVM (driver or executor) — HttpClient is thread-safe
+  // one client per JVM (driver or executor) — HttpClient is thread-safe.
+  // Not HttpURLConnection (as NlpService.HttpTagger uses): that re-sends a
+  // buffered POST once on a stale pooled connection, and a repeated
+  // `_search/scroll` continuation would skip a page.
   @transient private lazy val client: HttpClient =
     HttpClient.newBuilder().connectTimeout(Duration.ofSeconds(10)).build()
   private val mapper = new ObjectMapper()
@@ -193,9 +196,9 @@ object EsRest {
   def bulkIndex(df: DataFrame, conf: EsConf, index: String, idCol: String): Long = {
     val rows = df.select(col(idCol).cast("string").as("__id"),
       to_json(struct(df.columns.map(c => col(s"`$c`")): _*)).as("__doc"))
-    val idx = JsonUtil.quote(index)
+    val action = s"""{"index":{"_index":${JsonUtil.quote(index)},"_id":"""
     val failed = foreachBulk(rows, conf, r => Seq(
-      s"""{"index":{"_index":$idx,"_id":${JsonUtil.quote(r.getString(0))}}}""",
+      s"""$action${JsonUtil.quote(r.getString(0))}}}""",
       r.getString(1)))
     failed.value
   }
@@ -224,11 +227,12 @@ object EsRest {
       col(idCol).cast("string").as("__id"),
       to_json(col(annCol)).as("__anns"),
       to_json(struct(df.columns.map(c => col(s"`$c`")): _*)).as("__doc"))
-    val idx = JsonUtil.quote(index)
+    val action = s"""{"update":{"_index":${JsonUtil.quote(index)},"_id":"""
+    val script = s"""{"script":{"lang":"painless","source":${JsonUtil.quote(AnnotationsScript)},""" +
+      """"params":{"annotations":"""
     val failed = foreachBulk(rows, conf, r => Seq(
-      s"""{"update":{"_index":$idx,"_id":${JsonUtil.quote(r.getString(0))}}}""",
-      s"""{"script":{"lang":"painless","source":${JsonUtil.quote(AnnotationsScript)},""" +
-        s""""params":{"annotations":${r.getString(1)}}},"upsert":${r.getString(2)}}"""))
+      s"""$action${JsonUtil.quote(r.getString(0))}}}""",
+      s"""$script${r.getString(1)}}},"upsert":${r.getString(2)}}"""))
     failed.value
   }
 
