@@ -82,11 +82,11 @@ object Association {
     require(pairBudget > 0, s"need pairBudget > 0, got $pairBudget")
     require(hotBasketCap > 1, s"need hotBasketCap > 1, got $hotBasketCap")
     val op = snapshotProjection(baskets, basketCol, itemCol)
-    // Basket sizes: with `op` checkpointed hash(__bk)-partitioned, this
-    // aggregate needs NO exchange, so re-deriving it in the over-budget
-    // branch is one cheap checkpoint-scan — the r18 eager `bs` snapshot
-    // (one more job on every call, profiled as pure dispatch at sf0.1)
-    // bought nothing and is gone (r19).
+    // Basket sizes, not snapshotted: on the common under-budget path the
+    // histogram is their only consumer, and the over-budget branch
+    // re-derives them once from the `op` checkpoint — cheaper than an
+    // eager snapshot's extra job on every call (profiled as pure dispatch
+    // at sf0.1).
     val bs = op.groupBy("__bk").agg(count(lit(1)).as("__k"))
     // size histogram, ascending: O(√|op|) rows — driver-bounded
     val hist = bs.groupBy("__k").agg(count(lit(1)).as("__c"))
@@ -120,36 +120,22 @@ object Association {
       // (a join above CollectMetrics whose other side turns out empty
       // would replace the whole subtree, metrics included)
       val coldBk = Stage.snapshotDF(obs.filter(col("__k") <= cap).select("__bk"))
-      // cold projection feeds both self-join sides, but with `op` AND
-      // `coldBk` both hash(__bk)-partitioned (coldBk inherits op's layout
-      // through the size aggregate and its checkpoint) the join is
-      // exchange-free — re-deriving it per side is two cheap co-partitioned
-      // checkpoint joins, cheaper than the r18 eager snapshot's extra job
-      val coldOp = op.join(coldBk, Seq("__bk"))
+      // cold projection feeds BOTH self-join sides — snapshot it too
+      val coldOp = Stage.snapshotDF(op.join(coldBk, Seq("__bk")))
       rulesFrom(op, coldOp, minSupport, Some(n))
     }
   }
 
   /** The snapshotted distinct (basket, item) projection — it fans out to
     * the universe count, the item supports, and both self-join sides, so
-    * the corpus-sized distinct must not re-execute per consumer.
-    *
-    * Checkpointed hash(__bk)-partitioned and (__bk, __it)-sorted (r19,
-    * guide §2.4): the repartition lands BEFORE the distinct, whose
-    * aggregate is satisfied by the __bk-only clustering, so the build
-    * pays ONE exchange — and the basket-keyed consumers (the Σ k²
-    * pair self-join's two sides, the size aggregate, the guarded form's
-    * cold split join) all reuse the checkpoint's layout with no Exchange
-    * and no Sort of their own. At 100 TB the pair self-join is the
-    * operator's dominant shuffle; this removes it from both sides.
+    * the corpus-sized distinct must not re-execute per consumer. In the
+    * guarded form it also feeds the basket-size aggregate and the cold
+    * split join.
     */
   private def snapshotProjection(
       baskets: DataFrame, basketCol: String, itemCol: String): DataFrame =
-    Stage.snapshotPrePartitioned(
-      baskets.select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
-        .repartition(col("__bk"))
-        .distinct()
-        .sortWithinPartitions("__bk", "__it"))
+    Stage.snapshotDF(
+      baskets.select(col(basketCol).as("__bk"), col(itemCol).as("__it")).distinct())
 
   /** Rules with supports/universe from `op` (always the FULL projection —
     * exact denominators) and the pair stage over `pairOp` (full in the

@@ -1409,13 +1409,8 @@ object Corpus {
   def maxCoverageSelect(docTokens: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = docTokens.sparkSession
-    // One corpus-sized distinct, checkpointed pre-partitioned on `doc`
-    // (repartition BEFORE distinct: the aggregate is satisfied by the
-    // doc-only clustering, so one exchange total) — every round's gain
-    // aggregation then groups by `doc` with NO exchange (guide §2.4).
-    val dt = Stage.snapshotPrePartitioned(
-      docTokens.select(col("doc"), col("token"))
-        .repartition(col("doc")).distinct())
+    // one corpus-sized distinct, checkpointed once: every round reads it
+    val dt = Stage.snapshotDF(docTokens.select(col("doc"), col("token")).distinct())
     // r18-shape cost: 2 eager snapshots per round (a 1-row pick + the
     // re-checkpointed whole covered set) plus a semi-join — 31 jobs at
     // k=5, all dispatch (ConstantProfile r19). The pick is ONE row of
@@ -1423,8 +1418,8 @@ object Corpus {
     // inline the doc id as a literal; `covered` stays a union of ≤ k
     // FILTERS over the one dt checkpoint (never re-materialized) and is
     // bounded by k documents' tokens, so it broadcasts — each round is
-    // one job: scan checkpoint → broadcast-anti-join → in-partition
-    // gain aggregate → limit-1 collect.
+    // one collect: scan checkpoint → broadcast-anti-join → gain
+    // aggregate → limit-1.
     // The output rows are rebuilt from the collected literals under the
     // EXACT schema the old per-round select produced (template from the
     // same expressions over zero rows), so values, types and nullability

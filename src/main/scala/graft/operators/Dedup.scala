@@ -182,12 +182,7 @@ object Dedup {
     * survives. Pinned in SkewFixtureSpec.
     */
   private def bandBucketPairs(banded: DataFrame, maxBucketSize: Int): DataFrame = {
-    // keyed snapshot (r19): every consumer below — the size aggregate, the
-    // cap semi-join, the pair self-join — is keyed on (band, bucket), so
-    // hash-partitioning the checkpoint on that key removes ALL of their
-    // Exchanges (and the join-side Sorts): one exchange at the snapshot
-    // where the old plan paid one per consumer (guide §2.4)
-    val b = Stage.snapshotKeyed(banded, "band", "bucket")
+    val b = Stage.snapshotDF(banded)
     val over = col("__n") > maxBucketSize
     val keys = b.groupBy("band", "bucket")
       .agg(count(lit(1)).as("__n"))
@@ -397,8 +392,8 @@ object Dedup {
     * pairs in place — an `ObjectHashAggregate` whose sort-based fallback
     * measured 124× task time for 10× rows at ×100, with a live
     * single-task straggler in `SortBasedAggregator.findNextSortedGroup`
-    * (the r17 scale-killer; the old body survives as
-    * [[jaccardPairsAgg]], the A/B baseline). This form runs the same
+    * (the r17 scale-killer; DedupSpec keeps the old body as the
+    * row-for-row reference). This form runs the same
     * instancing through a sort-merge self-join — UnsafeRow binary sorts,
     * spillable, streamed per-key expansion — and a primitive
     * count/max HashAggregate: Tungsten end to end, no object path.
@@ -421,13 +416,8 @@ object Dedup {
       threshold: Double = 0.6): DataFrame = {
     // one shingling pass fans out to both join sides: snapshot, or the
     // self-join compiles the tokenize+shingle subtree twice (the 45×
-    // minhashSignatures incident). KEYED on the join key (r19): the
-    // checkpoint is hash(shingle)-partitioned and shingle-sorted, so the
-    // self-join below plans with NO Exchange and NO Sort on either side —
-    // the exchange is paid once at the snapshot instead of once per side
-    // (guide §2.4; plans/r19 q42 diff).
-    val sh = shingleIndex(docs, idCol, textCol, shingleK)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+    // minhashSignatures incident)
+    val sh = shingleIndex(docs, idCol, textCol, shingleK).transform(Stage.snapshotDF)
     val a = sh.select(col("shingle"), col("__id").as("id_a"), col("sz").as("sz_a"))
     val b = sh.select(col("shingle"), col("__id").as("id_b"), col("sz").as("sz_b"))
     jaccardScore(
@@ -436,32 +426,6 @@ object Dedup {
         .groupBy("id_a", "id_b")
         .agg(count(lit(1)).as("c"),
           max(col("sz_a")).as("sz_a"), max(col("sz_b")).as("sz_b")),
-      threshold)
-  }
-
-  /** The RETIRED collect_list physical form of [[jaccardPairs]], kept as
-    * the A/B baseline ([[graft.tools.PairStageAb]] prices the two forms;
-    * DedupSpec pins them row-identical). Do not use in new code: its
-    * `ObjectHashAggregate` reduce is the measured r17 ×100 scale-killer
-    * (124× task time for 10× rows; single-task object-sort straggler).
-    */
-  private[graft] def jaccardPairsAgg(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      threshold: Double = 0.6): DataFrame = {
-    // Inverted index without a self-join: docs sharing a shingle meet in one
-    // collect_list row; pairs are generated in-place and counted. Exact —
-    // every co-occurrence contributes exactly one pair instance.
-    jaccardScore(
-      shingleIndex(docs, idCol, textCol, shingleK)
-        .groupBy("shingle")
-        .agg(sort_array(collect_list(struct(col("__id"), col("sz")))).as("members"))
-        .filter(size(col("members")) > 1)
-        .select(explode_outer(pairsAs(col("members"), "a", "b")).as("p"))
-        .groupBy(col("p.a.__id").as("id_a"), col("p.b.__id").as("id_b"))
-        .agg(count(lit(1)).as("c"), max(col("p.a.sz")).as("sz_a"), max(col("p.b.sz")).as("sz_b")),
       threshold)
   }
 
@@ -488,13 +452,9 @@ object Dedup {
       shingleK: Int = 3,
       threshold: Double = 0.6): DataFrame =
     // the inverted-index rows feed df-count AND prefix ranking — one
-    // materialization (the same fan-out rule as tfidf/connectedComponents),
-    // keyed on the shingle (r19): the df aggregate, the prefix join and
-    // the candidate self-join are all shingle-keyed, so the checkpoint's
-    // hash(shingle) layout removes their Exchanges (guide §2.4)
+    // materialization (the same fan-out rule as tfidf/connectedComponents)
     jaccardPairsPrefixFrom(
-      shingleIndex(docs, idCol, textCol, shingleK)
-        .transform(df => Stage.snapshotKeyed(df, "shingle")),
+      shingleIndex(docs, idCol, textCol, shingleK).transform(Stage.snapshotDF),
       threshold)
 
   /** [[jaccardPairsPrefix]] over a prebuilt — and ALREADY SNAPSHOTTED —
@@ -563,12 +523,7 @@ object Dedup {
     */
   private def prefixCandidates(prefix: DataFrame, threshold: Double): DataFrame = {
     val posFactor = threshold / (1.0 + threshold)
-    // keyed snapshot (r19): hash(shingle) + shingle-sorted, so the
-    // self-join below loses both join-side Exchanges and Sorts — at ×100
-    // these were the two uniform SMJ stages spilling ~9 GB (q90's biggest
-    // absolute wall, VERDICT r18 #3/guide §2.4)
-    val p = Stage.snapshotKeyed(
-      prefix.select("shingle", "__id", "sz", "rn"), "shingle")
+    val p = Stage.snapshotDF(prefix.select("shingle", "__id", "sz", "rn"))
     p.select(col("shingle"), col("__id").as("id_a"),
         col("sz").as("sz_a"), col("rn").as("rn_a"))
       .join(p.select(col("shingle"), col("__id").as("id_b"),
@@ -755,11 +710,8 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
     // the index feeds prefix ranking, the dst probe side, AND verification —
-    // one materialization (the fan-out rule), shingle-keyed (r19): the df
-    // aggregate, the prefix join and the dst probe join reuse the
-    // checkpoint's hash(shingle) layout (guide §2.4)
-    val sh = shingleIndex(docs, idCol, textCol, shingleK)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+    // one materialization (the fan-out rule)
+    val sh = shingleIndex(docs, idCol, textCol, shingleK).transform(Stage.snapshotDF)
     val cand = prefixIndex(sh, threshold)
       .select(col("__id").as("id_src"), col("sz").as("sz_src"), col("shingle"))
       .join(sh.select(col("__id").as("id_dst"), col("sz").as("sz_dst"), col("shingle")),
@@ -1092,28 +1044,24 @@ object Dedup {
   /** SimHash near-dup pairs within a Hamming-distance budget, 16-bit-chunk
     * candidate generation (pigeonhole: distance ≤ 3 ⇒ ≥1 of 4 chunks
     * equal). Pair instancing is a chunk-keyed sort-merge self-join over
-    * the snapshotted fingerprint relation — the same r18 physical rewrite
-    * as [[bandBucketPairs]] (the prior `collect_list` member arrays
-    * routed the reduce through `ObjectHashAggregate`'s sort fallback, the
-    * r17 ×100 scale-killer); the fingerprints compute once, the per-doc
-    * 4-row chunk explode re-derives cheaply on each side.
+    * the snapshotted chunk relation — the same r18 physical rewrite as
+    * [[bandBucketPairs]] (the prior `collect_list` member arrays routed
+    * the reduce through `ObjectHashAggregate`'s sort fallback, the r17
+    * ×100 scale-killer); the fingerprints and their chunks compute once.
     */
   def simhashNearDups(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    // r19: the snapshot moved from the fingerprint table to the CHUNKED
-    // relation, keyed on the (chunk, ckey) join key — one checkpoint
-    // instead of two-sided re-derivation, and the self-join below loses
-    // both Exchanges and Sorts (guide §2.4). The 4-rows-per-doc blowup is
-    // id+fingerprint+two small ints — still signature-sized, never text.
-    val chunked = Stage.snapshotKeyed(
+    // the CHUNKED relation feeds both self-join sides: one checkpoint. Its
+    // 4-rows-per-doc blowup is id+fingerprint+two small ints — still
+    // signature-sized, never text.
+    val chunked = Stage.snapshotDF(
       simhash(docs, idCol, textCol)
         .select(col(idCol).as("__id"), col("simhash"),
           explode(sequence(lit(0), lit(3))).as("chunk"))
-        .withColumn("ckey", expr("shiftright(simhash, chunk * 16) & 65535")),
-      "chunk", "ckey")
+        .withColumn("ckey", expr("shiftright(simhash, chunk * 16) & 65535")))
     chunked
       .select(col("chunk"), col("ckey"),
         col("__id").as("id_a"), col("simhash").as("sh_a"))
@@ -1165,15 +1113,12 @@ object Dedup {
           .reduce(_ + _).as("simhash60"))
     // same r18 join-based pair instancing as [[simhashNearDups]]: the
     // 60-vote fingerprint aggregate runs once behind the snapshot, the
-    // chunk-keyed self-join replaces the object-agg member arrays.
-    // r19: the snapshot moved to the chunked relation, keyed on the
-    // (chunk, ckey) join key — the self-join loses both Exchanges and
-    // Sorts (guide §2.4, same as [[simhashNearDups]]).
-    val chunked = Stage.snapshotKeyed(
+    // chunk-keyed self-join replaces the object-agg member arrays; the
+    // snapshot sits on the chunked relation, as in [[simhashNearDups]]
+    val chunked = Stage.snapshotDF(
       fp.select(col("__id"), col("simhash60"),
         explode(sequence(lit(0), lit(3))).as("chunk"))
-        .withColumn("ckey", expr("shiftright(simhash60, chunk * 15) & 32767")),
-      "chunk", "ckey")
+        .withColumn("ckey", expr("shiftright(simhash60, chunk * 15) & 32767")))
     chunked
       .select(col("chunk"), col("ckey"),
         col("__id").as("id_a"), col("simhash60").as("sh_a"))
@@ -1210,18 +1155,10 @@ object Dedup {
     // dedup job) once per branch. Materializing the tiny pair list first makes
     // the union read 2× a checkpoint instead of running 2× the pipeline.
     val p = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).transform(Stage.snapshotDF)
-    // The symmetrized edge set is checkpointed PRE-PARTITIONED on `dst`
-    // (the per-round join key): the repartition lands BEFORE the distinct,
-    // whose aggregate is satisfied by the dst-only clustering (grouping
-    // keys ⊇ partitioning keys), so the build pays ONE exchange total and
-    // every round's edge-side Exchange + Sort disappears — the checkpoint's
-    // hash(dst) layout and dst-sorted order carry through `LogicalRDD`
-    // (guide §2.4; plans/r19 q42/q243 diffs).
-    val edges = Stage.snapshotPrePartitioned(p
+    val edges = p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst"))
       .distinct()
-      .sortWithinPartitions("dst"))
+      .transform(Stage.snapshotDF)
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .transform(Stage.snapshotDF)
@@ -1240,8 +1177,7 @@ object Dedup {
     // pin this). The win compounds with scale: settled components stop
     // paying the edge join every remaining round — the per-round shuffle
     // shrinks with the frontier instead of staying edge-sized, and once
-    // the frontier is small AQE broadcasts it, so the (pre-partitioned)
-    // edge checkpoint is only ever scanned.
+    // the frontier is small AQE broadcasts it.
     var frontier = labels
     var changed = 1L
     var rounds = 0

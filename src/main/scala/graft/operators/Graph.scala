@@ -626,17 +626,9 @@ object Graph {
       dstCol: String,
       maxHops: Int = 6): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1: $maxHops")
-    // The edge snapshot is pre-partitioned on `s` (the per-hop expansion
-    // key): the distinct's aggregate is satisfied by the s-only clustering,
-    // so the build pays one exchange and every hop's edge-side Exchange +
-    // Sort disappears (the checkpoint's layout carries through LogicalRDD —
-    // guide §2.4, same trick as connectedComponents' dst-keyed edges).
-    val e = Stage.snapshotPrePartitioned(edges
+    val e = Stage.snapshotDF(edges
       .select(col(srcCol).as("s"), col(dstCol).as("d"))
-      .filter(col("s") =!= col("d"))
-      .repartition(col("s"))
-      .distinct()
-      .sortWithinPartitions("s"))
+      .filter(col("s") =!= col("d")).distinct())
     // DELTA-LAYER BFS (r19, guide §2.1/§2.5): each hop checkpoints only the
     // NEWLY reached (src, node) rows instead of re-checkpointing the whole
     // growing reach relation (the old form re-materialized O(h·|reach|)

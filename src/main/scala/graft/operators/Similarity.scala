@@ -762,15 +762,12 @@ object Similarity {
       .filter(col("anchor") =!= col("neighbor"))
       .filter(round(cosine(col("va"), col("vn")), 4) >= minSim)
       .select(col("anchor"), col("neighbor"))
-      // keyed on `anchor` (r19, guide §2.4): degrees, the core semi-join
-      // and the border anti-join are all anchor-keyed, so they reuse the
-      // checkpoint's hash(anchor) layout instead of re-exchanging
-      .transform(df => Stage.snapshotKeyed(df, "anchor"))
+      .transform(Stage.snapshotDF) // feeds degrees, core edges, border attach
     // ONE ε-degree relation (r19): the r18 form re-aggregated `pairs` by
     // anchor three times (cores, border n_eps, noise n_eps) — same values,
     // three jobs' worth of stages; now computed once behind a snapshot
-    // (exchange-free: pairs is hash(anchor)-partitioned) and filtered per
-    // consumer. Output identical — n_eps was always the full pair degree.
+    // and filtered per consumer. Output identical — n_eps was always the
+    // full pair degree.
     val degrees = Stage.snapshotDF(
       pairs.groupBy("anchor").agg(count(lit(1)).as("n_eps")))
     val cores = degrees.filter(col("n_eps") >= minPts)

@@ -7,43 +7,32 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * Several operators compute an expensive intermediate that fans out to two
   * or more consumers (tfidf weights → norms + pairs, the CC loop's label
   * table, a shared shingle index). Referencing such a Dataset twice makes
-  * Catalyst re-execute the whole lineage per branch — the double-execution
-  * class fixed in round 3/4 — so those sites snapshot the subtree first.
-  *
-  * `snapshot` centralizes HOW that barrier is realized, selected by the
-  * session conf `spark.graft.checkpoint`:
+  * Catalyst re-execute the whole lineage per branch, so those sites
+  * snapshot the subtree first. `snapshot` is the one barrier, selected by
+  * the session conf `spark.graft.checkpoint`:
   *
   *  - `"local"` (default): `localCheckpoint(eager = true)` — blocks are
-  *    persisted on executor local storage (MEMORY_AND_DISK) immediately.
-  *    Fastest, right for `local[n]` and the bench, but NOT
-  *    fault-tolerant: on a multi-executor cluster an executor loss makes
-  *    its blocks unrecoverable and fails the job (no lineage left to
-  *    recompute from).
+  *    persisted on executor local storage (MEMORY_AND_DISK). Fastest,
+  *    right for `local[n]` and the bench, but NOT fault-tolerant: an
+  *    executor loss makes its blocks unrecoverable and fails the job.
   *  - `"reliable"`: `checkpoint(eager = true)` to the SparkContext
-  *    checkpoint directory (HDFS / object store) — survives executor loss;
-  *    the setting for long-running 100 TB jobs. The checkpoint dir is
-  *    taken from `spark.graft.checkpoint.dir` on first use if none is set.
-  *    Durability costs one extra lineage execution: Spark writes the
-  *    checkpoint files in a follow-up job after the materializing action
-  *    (persist-before-checkpoint would avoid it but leaks pinned storage
-  *    with no unpersist point inside a pure operator).
+  *    checkpoint directory (taken from `spark.graft.checkpoint.dir` on
+  *    first use if none is set) — survives executor loss. Durability costs
+  *    one extra lineage execution: Spark writes the checkpoint files in a
+  *    follow-up job after the materializing action.
   *
-  * EAGER (`eager = true`) in BOTH modes, deliberately. The lazy form was
-  * tried (round 7) to avoid firing a job at plan-construction time and
-  * DEADLOCKS under AQE: a lazily-checkpointed RDD is materialized by
-  * whichever action touches it first, and `RDD.doCheckpoint` at the end of
-  * that action takes the global `RDDCheckpointData` monitor and then the
-  * RDD's own lock — while a concurrently submitted job over the same RDD
-  * (AQE runs broadcast/shuffle stages on separate threads) makes
-  * `DAGScheduler.getCacheLocs` take those locks in the OPPOSITE order
-  * (RDD lock → `RDD.checkpointRDD` → checkpoint monitor). Observed as a
-  * Java-level deadlock between `broadcast-exchange-*` and
-  * `dag-scheduler-event-loop` (jstack, round 7). Eager checkpointing
-  * closes the race by construction: materialization completes on the
-  * calling thread before any consumer — hence any concurrent action —
-  * exists. The construction-time job is the price of a barrier that is
-  * safe under concurrent stage execution; the measured cost is within
-  * bench spread (BENCH_NOTES.md round 7).
+  * EAGER in both modes, deliberately. A lazy checkpoint DEADLOCKS under
+  * AQE (round 7, jstack): whichever action first materializes it takes the
+  * `RDDCheckpointData` monitor then the RDD lock, while a concurrent AQE
+  * stage over the same RDD takes them in the opposite order
+  * (`DAGScheduler.getCacheLocs`). Eager materialization completes on the
+  * calling thread before any consumer exists, so the race cannot occur.
+  *
+  * The snapshot carries no layout: consumers plan their own exchanges
+  * under the session's AQE setting, and nothing here writes session conf.
+  * A keyed (pre-partitioned) layout returns only at a site with a
+  * committed ×100 sort-merge win, behind a size gate, and with no
+  * session-conf toggle.
   */
 object Stage {
 
@@ -70,85 +59,6 @@ object Stage {
 
   /** `snapshot` for the callers that still want the DataFrame alias. */
   def snapshotDF(df: DataFrame): DataFrame = snapshot(df)
-
-  /** [[snapshot]] with the rows pre-partitioned (hash on `keys`) and sorted
-    * within partitions by `keys` first — the §2.4 "share one exchange"
-    * form for snapshots that fan out to several consumers KEYED THE SAME
-    * WAY (self-join sides, same-key aggregations). `Dataset.checkpoint` /
-    * `localCheckpoint` carry the physical plan's outputPartitioning and
-    * outputOrdering into the resulting `LogicalRDD`, so every keyed
-    * consumer reuses the checkpoint's layout instead of paying its own
-    * Exchange + Sort: a self-join on `keys` over this snapshot plans as a
-    * SortMergeJoin with NO exchange and NO sort on either side (verified
-    * in plans/r19 — the r18 pair-instancing join sites each lose two
-    * Exchanges and two Sorts). The repartition costs one exchange ONCE,
-    * where the first keyed consumer alone would have paid the same
-    * exchange anyway; every further consumer rides free. The local sort
-    * is what SortMergeJoin would have done per side, done once.
-    *
-    * Only worth it when the keyed consumers dominate: a consumer keyed
-    * differently still re-exchanges, and the snapshot itself pays the
-    * shuffle even if no consumer needs it — callers choose per site.
-    *
-    * AQE CAVEAT (measured, graft.tools.PartProbe): under AQE the
-    * checkpoint is taken from an `AdaptiveSparkPlanExec`, whose
-    * outputPartitioning is NOT mapped into the LogicalRDD — the scan
-    * comes back `UnknownPartitioning` and every consumer re-exchanges,
-    * silently undoing the whole point. The materialization therefore runs
-    * inside [[withAqeOff]]; consumers still plan and run under the
-    * session's normal AQE setting (the layout is baked into the
-    * checkpoint by then). Known trade, documented per site: the keyed
-    * checkpoint holds exactly spark.sql.shuffle.partitions partitions
-    * (no AQE coalescing of the build shuffle), and a downstream
-    * co-partitioned join has no Exchange for AQE's skew-split to re-plan
-    * — per-key size caps / prefix pruning bound that where it matters.
-    */
-  def snapshotKeyed(df: DataFrame, keys: String*): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    snapshotPrePartitioned(df.repartition(keys.map(col): _*)
-      .sortWithinPartitions(keys.map(col): _*))
-  }
-
-  /** [[snapshotKeyed]]'s AQE-off barrier for callers that hand-build the
-    * keyed layout (e.g. `repartition` BEFORE a `distinct` so the
-    * aggregate is satisfied by the key-subset clustering and the build
-    * pays one exchange total). `df` must already end in the partitioning/
-    * ordering the consumers want.
-    */
-  def snapshotPrePartitioned(df: DataFrame): DataFrame =
-    withAqeOff(df.sparkSession)(snapshot(df))
-
-  private val AqeConf = "spark.sql.adaptive.enabled"
-  private val aqeGuard = new Object
-  private var aqeDepth = 0
-  private var aqeSaved = "true"
-
-  /** Run `body` — which must complete any materialization EAGERLY before
-    * returning — with AQE disabled on the session, restoring the previous
-    * setting afterwards. Re-entrant and safe under concurrent snapshots
-    * (q248 submits five CC loops from a thread pool): a depth counter
-    * saves the original value only on the 0→1 transition and restores it
-    * only on the 1→0 transition, so interleaved windows can never
-    * "restore" the temporary `false` and wedge the session AQE-off.
-    * While any window is open, unrelated concurrent queries may plan
-    * AQE-off — a transient plan-shape wobble, never a semantic one (the
-    * AQE-off invariance axis is digest-identical by audit).
-    */
-  private def withAqeOff[T](
-      spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    aqeGuard.synchronized {
-      if (aqeDepth == 0) {
-        aqeSaved = spark.conf.get(AqeConf, "true")
-        spark.conf.set(AqeConf, "false")
-      }
-      aqeDepth += 1
-    }
-    try body
-    finally aqeGuard.synchronized {
-      aqeDepth -= 1
-      if (aqeDepth == 0) spark.conf.set(AqeConf, aqeSaved)
-    }
-  }
 
   val ScratchConf = "spark.graft.scratch.dir"
 

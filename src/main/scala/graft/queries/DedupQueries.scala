@@ -125,13 +125,7 @@ object DedupQueries {
     import graft.operators.Linkage
     val c = Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
-      // feeds pairs AND membership; keyed on the blocking columns (r19):
-      // the Σ block² candidate self-join reuses the checkpoint's
-      // hash(nation, segment) layout on both sides — no Exchange, no Sort
-      // (guide §2.4). The membership join is keyed differently and pays
-      // its own (usually broadcast) plan either way.
-      .transform(df => graft.operators.Stage.snapshotKeyed(
-        df, "c_nationkey", "c_mktsegment"))
+      .transform(graft.operators.Stage.snapshotDF) // feeds pairs AND membership
     val matched = Linkage
       .score(Linkage.candidatePairs(c, "c_custkey", Seq("c_nationkey", "c_mktsegment")),
         LinkageRules)
@@ -515,7 +509,7 @@ object DedupQueries {
     // candidate generation and verification share ONE checkpointed shingle
     // index — the corpus is shingled once for the whole pipeline
     val sh = Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     Dedup.jaccardVerify(Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
       .orderBy("id_a", "id_b")
   }
@@ -692,7 +686,7 @@ object DedupQueries {
     */
   def q108_guarded_drops: Q = (s, dir) => {
     val sh = Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     Dedup.jaccardDropsGuarded(sh, threshold = 0.6,
         pairBudget = 1L, hotPostingCap = 2)
       .select(col("__id").as("doc_id"))
@@ -722,7 +716,7 @@ object DedupQueries {
     */
   def q130_contain_drops: Q = (s, dir) => {
     val sh = Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     Dedup.containmentDropsGuarded(sh, threshold = 0.8,
         pairBudget = 1L, hotDfCap = 2)
       .select(col("__id").as("doc_id"))
@@ -744,7 +738,7 @@ object DedupQueries {
   def q134_contain_apply: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
     val sh = Dedup.shingleIndex(docs, "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     val drops = Dedup.containmentDrops(sh, threshold = 0.8)
       .select(col("__id").as("doc_id"))
     docs.join(drops, Seq("doc_id"), "left_anti")
@@ -777,7 +771,7 @@ object DedupQueries {
     val sh = Dedup.shingleIndex(
       Tables.documents(s, dir).filter(col("doc_id") % 3 === 0),
       "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     val exact = Dedup.jaccardPairsPrefixFrom(sh, threshold = 0.6)
     val cand = Dedup.minhashCandidatesDeterministicFrom(sh)
     Dedup.candidateRecallAudit(exact, cand)

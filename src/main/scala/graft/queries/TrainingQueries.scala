@@ -480,7 +480,7 @@ object TrainingQueries {
     // one checkpointed shingle index feeds candidate generation AND exact
     // verification — the corpus is shingled once for the whole pipeline
     val sh = graft.operators.Dedup.shingleIndex(docs, "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     val pairs = graft.operators.Dedup.jaccardVerify(
       graft.operators.Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
     val dupes = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")
@@ -568,7 +568,7 @@ object TrainingQueries {
   def q96_leakage_split: Q = (s, dir) => {
     val docs = Tables.documents(s, dir)
     val sh = graft.operators.Dedup.shingleIndex(docs, "doc_id", "text", 3)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     val pairs = graft.operators.Dedup.jaccardVerify(
       graft.operators.Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
     val comp = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")

@@ -61,7 +61,7 @@ object StreamingDedup {
     // one checkpointed shingle index feeds the within-batch pair stage AND
     // the history comparison
     val sh = Dedup.shingleIndex(batch, idCol, textCol, shingleK)
-      .transform(df => Stage.snapshotKeyed(df, "shingle"))
+      .transform(Stage.snapshotDF)
     // within-batch stage is the EXACT prefix-filtered form (under a cost
     // guard), not LSH candidates→verify: a micro-batch is small by
     // construction (batch sizing is the B1 knob), so exactness is

@@ -676,12 +676,36 @@ class DedupSpec extends SparkSuite {
     assert(audit(Seq((1L, 2L), (2L, 1L), (1L, 2L))) == ((1L, 0L, 0L, None)))
   }
 
+  /** The retired collect_list posting form of `jaccardPairs` (swapped
+    * out in r18: its `ObjectHashAggregate` reduce was the ×100
+    * scale-killer), kept here only as the semantic reference: docs sharing
+    * a shingle meet in one posting array and every co-occurrence
+    * contributes exactly one pair instance.
+    */
+  private def jaccardPairsAgg(
+      docs: org.apache.spark.sql.DataFrame, shingleK: Int, threshold: Double) = {
+    val m = col("members")
+    val pairs = flatten(transform(m, (x, i) =>
+      transform(slice(m, i + lit(2), size(m)), y => struct(x.as("a"), y.as("b")))))
+    Dedup.shingleIndex(docs, "doc_id", "text", shingleK)
+      .groupBy("shingle")
+      .agg(sort_array(collect_list(struct(col("__id"), col("sz")))).as("members"))
+      .filter(size(m) > 1)
+      .select(explode_outer(pairs).as("p"))
+      .groupBy(col("p.a.__id").as("id_a"), col("p.b.__id").as("id_b"))
+      .agg(count(lit(1)).as("c"), max(col("p.a.sz")).as("sz_a"), max(col("p.b.sz")).as("sz_b"))
+      .withColumn("jaccard",
+        col("c").cast("double") / (col("sz_a") + col("sz_b") - col("c")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+  }
+
   test("jaccardPairs (join form) == jaccardPairsAgg: the physical A/B forms agree row for row") {
     // the r18 swap dodges the ObjectHashAggregate sort fallback
     // (BENCH_NOTES r17 addendum, r18 ×100 A/B); it must be a PURELY
     // physical choice — the retired agg form is the semantic witness
     val docs = graft.Tables.documents(spark, sfDir)
-    val agg = Dedup.jaccardPairsAgg(docs, "doc_id", "text", 3, 0.5)
+    val agg = jaccardPairsAgg(docs, 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val join = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet

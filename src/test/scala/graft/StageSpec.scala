@@ -9,7 +9,9 @@ import graft.operators.{Corpus, Dedup, Stage}
 /** Stage.snapshot mode selection: local (default) vs reliable checkpoint.
   * The operators themselves are covered by their own suites; this asserts
   * the barrier is mode-transparent (same results) and that misconfiguration
-  * fails loudly instead of silently degrading.
+  * fails loudly instead of silently degrading, and that barriers on
+  * concurrent threads of one session leave each other's results, plans and
+  * the session conf alone.
   *
   * Declaration order matters: the failure-path test MUST run before any
   * reliable-mode success — SparkContext.setCheckpointDir is sticky on the
@@ -65,53 +67,37 @@ class StageSpec extends SparkSuite {
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("snapshotKeyed: checkpoint carries hash(key) layout (self-join plans " +
-    "with no Exchange, no Sort) and the AQE window restores the session conf") {
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val df = (1 to 500).map(i => (i.toLong, (i % 13).toString)).toDF("id", "k")
-    val ck = Stage.snapshotKeyed(df, "k")
-    assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == before,
-      "AQE-off window must restore the session setting")
-    // force SMJ so the co-partitioning is load-bearing, then check the
-    // physical plan: the keyed checkpoint must feed BOTH join sides with
-    // no Exchange and no Sort (the whole point of the keyed layout —
-    // under AQE-at-checkpoint the LogicalRDD came back UnknownPartitioning
-    // and this assertion fails, the PartProbe finding)
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = ck.select($"k", $"id".as("a"))
-        .join(ck.select($"k", $"id".as("b")), Seq("k"))
-        .filter($"a" < $"b")
-      val plan = j.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("Exchange"), s"keyed snapshot must co-partition the self-join:\n$plan")
-      assert(!plan.contains("+- Sort ["), s"keyed snapshot must carry the sort order:\n$plan")
-      // and the rows are what an unkeyed pipeline produces
-      val got = j.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val want = (1 to 500).flatMap(a => (a + 1 to 500).filter(b => b % 13 == a % 13)
-        .map(b => ((a % 13).toString, a.toLong, b.toLong))).toSet
-      assert(got == want)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-  }
-
-  test("snapshotKeyed: concurrent AQE-off windows never wedge the session " +
-    "(depth-counted save/restore, the q248 thread-pool pattern)") {
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  test("two barrier-heavy queries on threads of one session keep their " +
+    "digests, their AQE plans and the session's AQE setting") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val aqeConf = "spark.sql.adaptive.enabled"
+    val before = spark.conf.get(aqeConf, "true")
+    val names = Seq("q89_jaccard_verify", "q176_golden_record")
+    def digest(name: String) =
+      graft.tools.CanonDigest.digest(SparkEntry.queries(name)(spark, sfDir))
+    val serial = names.map(n => n -> digest(n)).toMap
+    // both threads build their query (and its eager snapshots) at once,
+    // so neither can plan inside the other's barriers unnoticed
+    val start = new java.util.concurrent.CyclicBarrier(names.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = (1 to 8).map { i =>
+    val concurrent = try {
+      Await.result(Future.sequence(names.map { n =>
         Future {
-          val df = (1 to 50).map(j => (j.toLong + i, (j % 5).toString)).toDF("id", "k")
-          Stage.snapshotKeyed(df, "k").count()
+          start.await()
+          val df = SparkEntry.queries(n)(spark, sfDir)
+          (n, graft.tools.CanonDigest.digest(df), df.queryExecution.executedPlan)
         }
-      }
-      Await.result(Future.sequence(fs), Duration(120L, "s"))
+      }), Duration(300L, "s"))
     } finally pool.shutdown()
-    assert(spark.conf.get("spark.sql.adaptive.enabled", "true") == before,
-      "interleaved windows must restore the ORIGINAL setting, not a temporary false")
+    concurrent.foreach { case (n, d, plan) =>
+      assert(d == serial(n), s"$n: concurrent digest differs from serial")
+      assert(plan.isInstanceOf[AdaptiveSparkPlanExec],
+        s"$n: executed plan lost its AdaptiveSparkPlan root:\n$plan")
+    }
+    assert(spark.conf.get(aqeConf, "true") == before,
+      "no barrier may leave the shared session's AQE setting changed")
   }
 }
