@@ -1,12 +1,17 @@
 package graft.streaming
 
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import scala.util.control.NonFatal
+import java.io.IOException
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.collection.immutable.TreeMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.EsRest
@@ -18,34 +23,23 @@ import graft.sources.EsRest
   * per row, `es_common.py:193-210` failed-item accounting) — so the live REST
   * protocol layer, not a parquet stand-in, is what the stream commits to.
   *
-  * Delivery semantics, spelled out because a sink that talks to an external
-  * store cannot ride Spark's transactional sinks:
-  *
   *  - **Effect idempotence.** The painless script REPLACES the stored
   *    annotations array wholesale and the `upsert` document inserts absent
   *    ids, so re-applying a micro-batch converges to the same index state —
   *    at-least-once delivery upgrades to effectively-exactly-once, the same
   *    argument [[StreamingPipeline.startUpsertSink]] makes for the parquet
   *    K5 face.
-  *  - **Accounting idempotence.** Spark replays a micro-batch (same
-  *    `batchId`) when a failure lands between sink completion and checkpoint
-  *    commit. Failed-doc counts are therefore keyed by (lineage epoch,
-  *    batchId) — each checkpoint lineage (identified by the checkpoint's
-  *    stable query id) owns its OWN epoch and its own bounded per-batch
-  *    window, so equal batchIds from different lineages never conflate and
-  *    TWO QUERIES SHARING ONE SINK keep two usable windows (each trigger
-  *    carries its lineage tag; an interleaved trigger switches the current
-  *    epoch without clearing anything) — and a replay OVERWRITES its
-  *    batch's entry instead of adding a second one — `failedTotal` never
-  *    double-counts a replayed batch. The maps live in the driver
-  *    (foreachBatch bodies run driver-side; the per-partition bulk POSTs
-  *    inside [[EsRest]] are what fan out), and like the reference's
-  *    failed-docs log they are OBSERVABILITY state, not delivery state. By
-  *    default a driver restart zeroes the counters (the checkpoint still
-  *    guarantees every batch lands); pass
-  *    `accountingDir = Some(s"$checkpoint/graft_failed_docs")` to make the
-  *    accounting DURABLE — per-batch counts + the running total persist
-  *    across restarts, the reference's on-disk failed-docs log.
+  *  - **Failed-doc accounting lives in the checkpoint.** Each checkpoint
+  *    owns one log, `<checkpoint>/graft_failed_docs/<batchId>`, whose
+  *    entries hold `{"failed": n, "total": t}` with `t` that checkpoint's
+  *    running total through the batch (the reference's failed-docs log,
+  *    `es_common.py:198-210`). Entries are written with Spark's atomic
+  *    checkpoint writer and purged with Spark's own retention,
+  *    `spark.sql.streaming.minBatchesToRetain`. The directory is the
+  *    lineage: a replayed batch overwrites its own entry and counts once,
+  *    a recreated checkpoint starts an empty log, and two queries sharing
+  *    one sink write two logs. A driver restart resumes the counts;
+  *    deleting the checkpoint drops them with its offsets and commits.
   *  - **Backpressure.** 429/503 inside a batch back off and retry inside
   *    [[EsRest.requestRetrying]]; a chunk that never clears counts its docs
   *    failed and the STREAM KEEPS RUNNING (B4 count-and-continue), surfacing
@@ -53,368 +47,89 @@ import graft.sources.EsRest
   *
   * At 100 TB/day the shape holds: the driver sees only batch metadata, every
   * partition posts its own `chunkSize`-doc NDJSON bodies, and state is the
-  * ES index itself — no Spark-side state store grows with the corpus,
-  * and the driver-side accounting is bounded on BOTH axes: `retainBatches`
-  * entries per epoch (a perpetual sub-second-trigger stream would otherwise
-  * leak one map entry per trigger forever) and `retainEpochs` epochs total
-  * (a restart-churning deployment would otherwise leak one window — and one
-  * directory of files — per checkpoint recreation).
+  * ES index itself plus one tiny file per retained batch.
   */
-class EsUpsertSink(
-    conf: EsRest.EsConf,
-    index: String,
-    idCol: String,
-    annCol: String,
-    retainBatches: Int = EsUpsertSink.DefaultRetainBatches,
-    accountingDir: Option[String] = None,
-    retainEpochs: Int = EsUpsertSink.DefaultRetainEpochs) {
+class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: String) {
 
-  require(retainBatches > 0, s"need retainBatches > 0, got $retainBatches")
-  require(retainEpochs > 0, s"need retainEpochs > 0, got $retainEpochs")
-
-  // Per-epoch bounded windows + a running total adjusted on (over)write.
-  // Eviction inside an epoch is safe for the replay-overwrite contract
-  // because Spark only ever replays the NEWEST batch of a checkpoint
-  // lineage (the one whose commit is missing) — a batchId can never
-  // reappear after `retainBatches` newer ones have committed. Plain
-  // TreeMaps under ONE lock, not concurrent structures: the put +
-  // total-adjust + evict sequence must be atomic (two queries sharing a
-  // sink could otherwise drift `failedTotal` away from any consistent
-  // batch view). The bulk POST itself stays OUTSIDE the lock.
-  private[this] val lock = new Object
-  private[this] val windows = mutable.TreeMap.empty[Long, mutable.TreeMap[Long, Long]]
-  private[this] var totalFailed = 0L // guarded by lock
-
-  // Lineage accounting: a fresh checkpoint restarts batchIds at 0, so a
-  // bare batchId is ambiguous across checkpoint lineages. The durable key
-  // is therefore (epoch, batchId): each DISTINCT lineage tag — the
-  // checkpoint's own stable query id (`<checkpoint>/metadata` `"id"`),
-  // which [[start]] resolves at the first trigger and feeds through every
-  // [[processBatch]] call — maps to its own epoch, assigned once and
-  // never un-assigned while this instance lives. Same checkpoint ⇒ same
-  // tag ⇒ same epoch ⇒ replays keep overwriting; deleted-and-recreated
-  // checkpoint ⇒ new tag ⇒ new epoch, so equal batchIds across lineages
-  // stop conflating and the running total accumulates across the
-  // boundary; two checkpoints INTERLEAVING through one sink instance ⇒
-  // two epochs, each keeping its own usable window (the r17 ping-pong —
-  // bump-and-clear per interleaved trigger — is gone by construction).
-  // Direct-driven sinks with no tag fall back to the batchId heuristic
-  // in [[processBatch]].
-  private[this] val epochByTag = mutable.LinkedHashMap.empty[String, Long]
-  private[this] var currentEpoch = 0L // guarded by lock
-  private[this] var nextEpoch = 1L    // guarded by lock
-  private[this] var persistSeq = 0L   // guarded by lock; total-ordering for files
-
-  // DURABLE accounting (the reference's persisted failed-docs log,
-  // `es_common.py:198-210`, which survives process death — the in-memory
-  // maps do not): with `accountingDir` set (recommended:
-  // `<checkpoint>/graft_failed_docs`, a shared FS on a real cluster), each
-  // trigger writes one tiny `epoch=<e>.batch=<id>.json` carrying that
-  // batch's count, the post-batch running total, its lineage tag, and a
-  // monotonic `seq` — the total-order tiebreak that (epoch, batchId)
-  // alone cannot give once two lineages interleave — overwrite by
-  // (epoch, batchId), the same replay-idempotence argument as the memory
-  // window — and construction seeds the windows + total from whatever is
-  // on disk, so a restarted driver resumes its counts instead of zeroing
-  // them. Writes are ATOMIC: create under a dot-temp name, then a
-  // FileContext OVERWRITE rename — one metadata operation on FSes that
-  // support it (HDFS), so a replay overwrite has NO window in which the
-  // batch's file is missing (the r17 delete-then-rename gap); on FSes
-  // without FileContext support the delete+rename fallback's microscopic
-  // window is covered by the loader's parse-tolerant fallback, which
-  // additionally SKIPS any unparseable file (falling back to the
-  // next-newest parseable one for the total) so a torn file from a
-  // pre-atomic writer degrades one batch of observability instead of
-  // wedging every restart. Window eviction deletes the evicted batch's
-  // file; whole epochs age out past `retainEpochs`. Legacy
-  // `batch=<id>.json` files (pre-epoch format) are MIGRATED to their
-  // epoch-qualified names once at load, so a replay or eviction can never
-  // leave two files for the same (0, id). All writes go through the
-  // Hadoop FS API, driver-side, one small create+rename per trigger.
   private[this] val mapper = new ObjectMapper()
-  accountingDir.foreach(loadPersisted)
+
+  // qualified log dirs of every checkpoint this instance started or processed
+  private[this] val logs = ConcurrentHashMap.newKeySet[Path]()
 
   private def hadoopConf =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
-  private def hadoopFs(dir: String) = new Path(dir).getFileSystem(hadoopConf)
-
-  /** `epoch=<e>.batch=<id>.json` → (e, id); legacy `batch=<id>.json`
-    * (pre-epoch format) reads as epoch 0 so an upgraded sink resumes an
-    * old directory's totals.
-    */
-  private def parseName(n: String): Option[(Long, Long)] =
-    if (!n.endsWith(".json")) None
-    else {
-      val stem = n.stripSuffix(".json")
-      if (stem.startsWith("epoch=")) stem.stripPrefix("epoch=").split("\\.batch=") match {
-        case Array(e, b) => for (el <- e.toLongOption; bl <- b.toLongOption) yield (el, bl)
-        case _ => None
-      }
-      else if (stem.startsWith("batch=")) stem.stripPrefix("batch=").toLongOption.map((0L, _))
-      else None
-    }
-
-  private def fileName(ep: Long, batchId: Long): String = s"epoch=$ep.batch=$batchId.json"
-
-  /** One-time upgrade of a pre-epoch directory: rename each legacy
-    * `batch=<id>.json` to `epoch=0.batch=<id>.json` (or delete it when
-    * the qualified name already exists — the duplicate the r17 eviction
-    * gap could leave), so every later overwrite/evict path has exactly
-    * one name per (epoch, batchId) to manage. Best-effort per file; a
-    * file that resists migration is still read this load and retried
-    * next restart.
-    */
-  private def migrateLegacy(fs: org.apache.hadoop.fs.FileSystem, root: Path): Unit =
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("batch=") && n.endsWith(".json"))
-        parseName(n).foreach { case (e, b) =>
-          try {
-            val qualified = new Path(root, fileName(e, b))
-            if (fs.exists(qualified)) fs.delete(st.getPath, false)
-            else fs.rename(st.getPath, qualified)
-          } catch { case NonFatal(_) => () }
-        }
-      ()
-    }
-
-  private def loadPersisted(dir: String): Unit = {
-    val fs = hadoopFs(dir)
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    migrateLegacy(fs, root)
-    val entries = fs.listStatus(root).toSeq
-      .flatMap(st => parseName(st.getPath.getName).map { case (e, b) => (e, b, st.getPath) })
-      .sortBy { case (e, b, _) => (e, b) }
-    if (entries.isEmpty) return
-    // Torn or foreign files are skipped, not thrown on; every parseable
-    // epoch seeds its own window (an interleaving co-tenant's lineage
-    // stays usable across a restart), and the chronologically NEWEST
-    // file — max `seq`, falling back to (epoch, batchId) order for
-    // pre-seq files — names the resumed total and current epoch.
-    val parsedAll = entries.flatMap { case (e, b, p) =>
-      try {
-        val in = fs.open(p)
-        val tree = try mapper.readTree(in) finally in.close()
-        if (tree.path("failed").isMissingNode || tree.path("cumTotal").isMissingNode) None
-        else Some((e, b, tree))
-      } catch { case NonFatal(_) => None } // torn file: skip, not wedge
-    }
-    if (parsedAll.isEmpty) return
-    lock.synchronized {
-      parsedAll.groupBy(_._1).foreach { case (e, files) =>
-        val w = windows.getOrElseUpdate(e, mutable.TreeMap.empty)
-        files.sortBy(_._2).takeRight(retainBatches).foreach { case (_, b, tree) =>
-          w.put(b, tree.path("failed").asLong())
-        }
-        // re-learn each epoch's lineage tag (newest file of the epoch
-        // that carries one), so a co-tenant's ensureLineage after a
-        // restart resolves to its OLD epoch instead of opening a new one
-        files.reverseIterator
-          .map(_._3.path("lineage").asText(""))
-          .find(_.nonEmpty)
-          .foreach(t => epochByTag.getOrElseUpdate(t, e))
-      }
-      val newest = parsedAll.maxBy { case (e, b, tree) =>
-        (if (tree.path("seq").isMissingNode) -1L else tree.path("seq").asLong(), e, b)
-      }
-      totalFailed = newest._3.path("cumTotal").asLong()
-      currentEpoch = newest._1
-      nextEpoch = parsedAll.map(_._1).max + 1
-      persistSeq =
-        parsedAll.map(t => t._3.path("seq").asLong(-1L)).max + 1
-    }
+  private def logDir(checkpoint: String): Path = {
+    val dir = new Path(checkpoint, "graft_failed_docs")
+    dir.getFileSystem(hadoopConf).makeQualified(dir)
   }
 
-  /** Must be called with `lock` held (reads epoch state, totalFailed).
-    * Atomic: create under a dot-temp name, rename into place with
-    * FileContext OVERWRITE — one operation where the FS supports it, so a
-    * replay overwrite never passes through a no-file state; the
-    * delete+rename fallback (plus the loader's parse-tolerant fallback)
-    * covers FSes that don't.
+  /** Batch id → entry file. Only names that parse as a batch id count, so
+    * the writer's dot-prefixed temp files and `.crc` sidecars never do.
     */
-  private def persist(dir: String, ep: Long, batchId: Long, n: Long,
-      evicted: Seq[Long]): Unit = {
-    val fs = hadoopFs(dir)
-    fs.mkdirs(new Path(dir))
-    val finalPath = new Path(dir, fileName(ep, batchId))
-    val tmpPath = new Path(dir, s".tmp.${fileName(ep, batchId)}")
-    // serialize with the mapper, never string interpolation: a lineage
-    // tag containing a quote or backslash must not produce an
-    // unparseable epoch (ADVICE r17 — the tolerant loader would then
-    // silently fall back to an older epoch's total)
-    val node = mapper.createObjectNode()
-    node.put("failed", n)
-    node.put("cumTotal", totalFailed)
-    node.put("epoch", ep)
-    node.put("seq", persistSeq)
-    persistSeq += 1
-    epochByTag.collectFirst { case (t, e) if e == ep => t }
-      .foreach(t => node.put("lineage", t))
-    val out = fs.create(tmpPath, true)
-    try out.write(mapper.writeValueAsBytes(node))
-    finally out.close()
-    try {
-      FileContext.getFileContext(finalPath.toUri, hadoopConf)
-        .rename(tmpPath, finalPath, Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException | _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (fs.exists(finalPath)) fs.delete(finalPath, false)
-        if (!fs.rename(tmpPath, finalPath))
-          throw new java.io.IOException(s"rename $tmpPath -> $finalPath failed")
-    }
-    evicted.foreach { id =>
-      try fs.delete(new Path(dir, fileName(ep, id)), false)
-      catch { case NonFatal(_) => () }
-    }
+  private def entries(fm: CheckpointFileManager, dir: Path): TreeMap[Long, Path] =
+    if (!fm.exists(dir)) TreeMap.empty
+    else TreeMap.from(fm.list(dir).iterator.flatMap { st =>
+      st.getPath.getName.toLongOption.map(_ -> st.getPath)
+    })
+
+  /** (failed, total) of one entry; the atomic writer never leaves a
+    * partial file, so an unreadable one is corruption from outside.
+    */
+  private def read(fm: CheckpointFileManager, p: Path): (Long, Long) = {
+    val in = fm.open(p)
+    val tree = try mapper.readTree(in) catch { case _: JsonProcessingException => null } finally in.close()
+    if (tree == null || !tree.path("failed").isIntegralNumber || !tree.path("total").isIntegralNumber)
+      throw new IOException(s"corrupt failed-doc log entry $p")
+    (tree.get("failed").asLong, tree.get("total").asLong)
   }
 
-  /** Best-effort GC of persisted files belonging to aged-out epochs —
-    * every epoch NOT in `keep`. Called AFTER the surviving epochs' files
-    * are on disk, so a crash at any point leaves a directory whose
-    * newest files carry a correct running total — never an empty
-    * directory that would zero a resumed total.
+  /** Failed-item counts of the retained batches in `checkpoint`'s log
+    * (batchId → failures), replay-stable.
     */
-  private def dropEpochFiles(dir: String, keep: Set[Long]): Unit = {
-    val fs = hadoopFs(dir)
-    val root = new Path(dir)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { st =>
-      parseName(st.getPath.getName) match {
-        case Some((e, _)) if !keep.contains(e) =>
-          try fs.delete(st.getPath, false)
-          catch { case NonFatal(_) => () }
-        case _ => ()
-      }
-    }
+  def failedByBatchId(checkpoint: String): Map[Long, Long] = {
+    val dir = logDir(checkpoint)
+    val fm = CheckpointFileManager.create(dir, hadoopConf)
+    entries(fm, dir).map { case (id, p) => id -> read(fm, p)._1 }
   }
 
-  /** Declare the lineage the NEXT batches serve (idempotent per tag).
-    * [[start]] resolves the checkpoint's stable query id at the first
-    * trigger and passes it with EVERY [[processBatch]] call; this method
-    * is the same declaration for callers driving [[processBatch]]
-    * directly with their own lineage notion. A tag seen before — in this
-    * instance's lifetime or re-learned from the accounting dir — resolves
-    * to ITS OWN epoch (so two checkpoints interleaving through one sink
-    * switch epochs instead of bumping them, and each keeps a usable
-    * window); a genuinely new tag opens a new epoch. The first tag ever
-    * declared adopts the current epoch in place — it names the lineage
-    * whose batches (if any) this sink has already been counting.
+  /** Total failed docs over every checkpoint this instance has started or
+    * processed — each log's newest running total, so replayed batches
+    * count once (the reference's end-of-run `docs_failed`,
+    * `es_common.py:208-210`).
     */
-  def ensureLineage(tag: String): Unit = lock.synchronized(ensureLineageLocked(tag))
-
-  private def ensureLineageLocked(tag: String): Unit =
-    epochByTag.get(tag) match {
-      case Some(e) => currentEpoch = e
-      case None =>
-        if (epochByTag.isEmpty) epochByTag.put(tag, currentEpoch)
-        else {
-          currentEpoch = nextEpoch
-          nextEpoch += 1
-          epochByTag.put(tag, currentEpoch)
-        }
-        ()
-    }
-
-  /** Open a fresh epoch for the current lineage (the batchId heuristic
-    * detected a restarted-id sequence): the tag (if any) moves with it —
-    * the lineage is a new incarnation of the same checkpoint path — and
-    * the dead incarnation's window is dropped from memory (its files age
-    * out via `retainEpochs`). Lock held.
-    */
-  private def rotateEpochLocked(): Unit = {
-    val dead = currentEpoch
-    currentEpoch = nextEpoch
-    nextEpoch += 1
-    epochByTag.collectFirst { case (t, e) if e == dead => t }
-      .foreach(t => epochByTag.put(t, currentEpoch))
-    windows.remove(dead)
-    ()
-  }
-
-  /** Failed-item counts for the most recent `retainBatches` batches of
-    * the CURRENT lineage (batchId → failures), replay-stable inside the
-    * window. For a specific co-tenant lineage use the tagged overload.
-    */
-  def failedByBatchId: Map[Long, Long] = lock.synchronized {
-    windows.get(currentEpoch).map(_.toMap).getOrElse(Map.empty)
-  }
-
-  /** The named lineage's window (empty for an unknown tag) — usable even
-    * while another query interleaves its own triggers through this sink.
-    */
-  def failedByBatchId(tag: String): Map[Long, Long] = lock.synchronized {
-    epochByTag.get(tag).flatMap(windows.get).map(_.toMap).getOrElse(Map.empty)
-  }
-
-  /** Total failed docs across ALL triggers seen by this sink instance —
-    * replayed batches count once (the reference's end-of-run
-    * `docs_failed` total, `es_common.py:208-210`). Spans lineages; unlike
-    * [[failedByBatchId]] this survives window eviction and epoch aging.
-    */
-  def failedTotal: Long = lock.synchronized(totalFailed)
-
-  /** Ordinal of the current accounting lineage (0-based; switches when
-    * [[ensureLineage]] sees a different checkpoint id, advances when a
-    * new lineage appears or the batchId heuristic fires). The durable key
-    * is (epoch, batchId), so equal batchIds from different checkpoint
-    * lineages occupy DISTINCT files.
-    */
-  def lineageEpoch: Long = lock.synchronized(currentEpoch)
+  def failedTotal: Long = logs.asScala.iterator.map { dir =>
+    val fm = CheckpointFileManager.create(dir, hadoopConf)
+    entries(fm, dir).lastOption.fold(0L) { case (_, p) => read(fm, p)._2 }
+  }.sum
 
   /** The foreachBatch body: one scripted-bulk-upsert pass for this
-    * micro-batch, accounted under the current lineage. Public so a
-    * recovery path can be driven directly in tests — Spark calls it with
-    * the SAME batchId on replay.
+    * micro-batch, then its entry in `checkpoint`'s failed-doc log. Public
+    * so a recovery path can be driven directly in tests — Spark calls it
+    * with the SAME batchId on replay.
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit =
-    processBatch(batch, batchId, None)
-
-  /** [[processBatch]] with the batch's lineage declared per call — what
-    * [[start]] wires, so interleaved triggers from two queries each land
-    * in their own epoch no matter the arrival order.
-    */
-  def processBatch(batch: DataFrame, batchId: Long, tag: Option[String]): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, checkpoint: String): Unit = {
     val n = EsRest.bulkUpsertAnnotations(batch, conf, index, idCol, annCol)
-    val agedOut = lock.synchronized {
-      tag.foreach(ensureLineageLocked)
-      // a batchId BELOW the window with no entry of its own means a new
-      // lineage incarnation (stop → start() against a fresh checkpoint
-      // restarts ids at 0): open a new epoch, or the new incarnation's
-      // low ids would be inserted-then-instantly-evicted and a
-      // legitimate replay of them would double-count the total. This
-      // heuristic cannot see an equal-id collision (both lineages at
-      // batch 0) — the lineage tag, fed the checkpoint's stable query id
-      // by [[start]], detects that case exactly.
-      windows.get(currentEpoch).foreach { w =>
-        if (w.nonEmpty && batchId < w.firstKey && !w.contains(batchId))
-          rotateEpochLocked()
-      }
-      val w = windows.getOrElseUpdate(currentEpoch, mutable.TreeMap.empty)
-      val prev = w.put(batchId, n)
-      totalFailed += n - prev.getOrElse(0L)
-      val evicted = Seq.newBuilder[Long]
-      while (w.size > retainBatches) {
-        val (k, _) = w.head
-        w.remove(k)
-        evicted += k
-      }
-      accountingDir.foreach(persist(_, currentEpoch, batchId, n, evicted.result()))
-      // age out whole epochs beyond the retention bound — restart churn
-      // must not leak one window (and one directory of files) per
-      // checkpoint recreation. The current epoch always survives; the
-      // epochs dropped are the OLDEST, i.e. lineages long superseded.
-      if (windows.size > retainEpochs) {
-        val keep = windows.keys.toSeq.sorted.takeRight(retainEpochs).toSet + currentEpoch
-        windows.keys.toSeq.filterNot(keep).foreach(windows.remove)
-        epochByTag.filterInPlace { case (_, e) => keep.contains(e) }
-        accountingDir.map((_, keep))
-      } else None
+    val dir = logDir(checkpoint)
+    logs.add(dir)
+    val fm = CheckpointFileManager.create(dir, hadoopConf)
+    val log = entries(fm, dir)
+    // running total before this batch; a replay backs its own entry out
+    val before = log.rangeTo(batchId).lastOption.fold(0L) { case (id, p) =>
+      val (failed, total) = read(fm, p)
+      if (id == batchId) total - failed else total
     }
-    agedOut.foreach { case (dir, keep) => dropEpochFiles(dir, keep) }
+    if (log.isEmpty) fm.mkdirs(dir)
+    val entry = mapper.createObjectNode().put("failed", n).put("total", before + n)
+    val out = fm.createAtomic(new Path(dir, batchId.toString), true)
+    try {
+      out.write(mapper.writeValueAsBytes(entry))
+      out.close()
+    } catch { case e: Throwable => out.cancel(); throw e }
+    val retain = batch.sparkSession.conf.get(SQLConf.MIN_BATCHES_TO_RETAIN.key).toLong
+    log.rangeTo(batchId - retain).valuesIterator.foreach(fm.delete)
   }
 
   /** Start the stream: annotated rows → per-trigger scripted ES upsert.
@@ -426,53 +141,12 @@ class EsUpsertSink(
       annotated: DataFrame,
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // resolved lazily at the FIRST trigger (the metadata file exists by
-    // then; at start() time a brand-new checkpoint hasn't written it yet),
-    // then carried with EVERY batch — interleaved co-tenant triggers must
-    // each declare their own lineage, not inherit the last caller's
-    var resolvedTag: Option[String] = None
-    var lineageResolved = false
+    logs.add(logDir(checkpoint))
     annotated.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!lineageResolved) {
-          resolvedTag = checkpointQueryId(checkpoint)
-          lineageResolved = true
-        }
-        processBatch(batch, batchId, resolvedTag)
-      }
+      .foreachBatch((batch: DataFrame, batchId: Long) => processBatch(batch, batchId, checkpoint))
       .start()
   }
-
-  /** The checkpoint's stable query id (`<checkpoint>/metadata` `"id"`):
-    * constant across restarts of the same checkpoint, fresh when the
-    * checkpoint is deleted and recreated — exactly a lineage identity.
-    */
-  private def checkpointQueryId(checkpoint: String): Option[String] =
-    try {
-      val fs = hadoopFs(checkpoint)
-      val p = new Path(checkpoint, "metadata")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val tree = try mapper.readTree(in) finally in.close()
-        Option(tree.path("id").asText(null)).filter(_.nonEmpty)
-      }
-    } catch { case NonFatal(_) => None }
-}
-
-object EsUpsertSink {
-  /** Default per-batch accounting window — far beyond any replay depth
-    * (Spark replays only the newest uncommitted batch) while keeping the
-    * map a bounded few hundred KB on a perpetual stream.
-    */
-  val DefaultRetainBatches: Int = 10000
-
-  /** Default epoch retention — far beyond any number of lineages one
-    * sink instance plausibly serves at once (each query is one), while
-    * bounding window + file leakage under restart churn.
-    */
-  val DefaultRetainEpochs: Int = 8
 }

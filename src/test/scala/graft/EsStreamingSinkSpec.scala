@@ -1,27 +1,32 @@
 package graft
 
+import java.io.IOException
 import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.EsRest
 import graft.sources.EsRest.EsConf
 import graft.streaming.EsUpsertSink
 
 /** The north-star sentence as one RUNNING job: Structured Streaming →
-  * [[EsUpsertSink]] → the live [[EsRest]] protocol → [[EsStub]]. Three
-  * contracts, each the streaming face of a batch-proven EsStubSpec test:
+  * [[EsUpsertSink]] → the live [[EsRest]] protocol → [[EsStub]]. The
+  * streaming faces of batch-proven EsStubSpec tests:
   *
   *  1. exactly-once under batchId replay — the checkpoint's commit marker
   *     for a finished batch is DELETED and the query restarted, which is
   *     precisely the crash window Spark re-runs a batch for; the replayed
-  *     batch converges (script idempotence) and its failures count once
-  *     (accounting keyed by batchId);
+  *     batch converges (script idempotence) and its failures count once;
   *  2. mid-stream 429 backoff clears without failed docs (B3);
   *  3. per-item failures accumulate across TRIGGERS, siblings land (B4 /
-  *     `es_common.py:198-210` failed-docs accounting).
+  *     `es_common.py:198-210` failed-docs accounting);
+  *  4. the failed-doc counts live in `<checkpoint>/graft_failed_docs`: they
+  *     survive a driver restart, follow `minBatchesToRetain`, keep each
+  *     checkpoint apart, and a corrupt entry fails loudly.
   */
 class EsStreamingSinkSpec extends SparkSuite {
   import spark.implicits._
@@ -34,23 +39,30 @@ class EsStreamingSinkSpec extends SparkSuite {
     Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
       .iterator().asScala.foreach(Files.delete)
 
+  private def sinkOf(conf: EsConf) = new EsUpsertSink(conf, "anns", "doc_id", "annotations")
+
+  private def batchOf(id: Long) = Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
+
+  private def logNames(ckpt: Path): Set[String] =
+    Files.list(ckpt.resolve("graft_failed_docs")).iterator().asScala
+      .map(_.getFileName.toString).toSet
+
   test("north star: writeStream -> EsRest scripted upsert is exactly-once under batchId replay") {
     withStub { stub =>
       val ckpt = tempDir("replay")
       try {
         val conf = EsConf(stub.url, retryBackoffMs = 5)
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations")
+        val sink = sinkOf(conf)
         implicit val sqlCtx = spark.sqlContext
         val mem = MemoryStream[(Long, Seq[String])]
         val stream = mem.toDF.toDF("doc_id", "annotations")
 
         mem.addData((1L, Seq("join", "merge")), (2L, Seq("scan")))
-        val q1 = sink.start(stream, ckpt.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+        val q1 = sink.start(stream, ckpt.toString, Trigger.ProcessingTime(0))
         q1.processAllAvailable(); q1.stop()
         assert(EsRest.count(conf, "anns") == 2L)
         assert(stub.indices("anns")._2("1").path("annotations").toString == """["join","merge"]""")
-        assert(sink.failedByBatchId == Map(0L -> 0L))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 0L))
         val updatesAfterFirstRun =
           stub.bulkBodies.asScala.count(_.contains("\"update\""))
 
@@ -60,8 +72,7 @@ class EsStreamingSinkSpec extends SparkSuite {
         // the local-FS checkpoint manager writes a Hadoop .crc sidecar per
         // commit file; a torn commit loses both
         Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
-        val q2 = sink.start(stream, ckpt.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+        val q2 = sink.start(stream, ckpt.toString, Trigger.ProcessingTime(0))
         q2.processAllAvailable()
 
         // the batch really was re-sent over the wire...
@@ -70,15 +81,48 @@ class EsStreamingSinkSpec extends SparkSuite {
         // ...and converged: same index state, same single accounting entry
         assert(EsRest.count(conf, "anns") == 2L)
         assert(stub.indices("anns")._2("1").path("annotations").toString == """["join","merge"]""")
-        assert(sink.failedByBatchId == Map(0L -> 0L),
-          s"replay must overwrite, not append: ${sink.failedByBatchId}")
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 0L),
+          s"replay must overwrite, not append: ${sink.failedByBatchId(ckpt.toString)}")
 
         // the stream keeps going: a later trigger script-updates doc 1 in place
         mem.addData((1L, Seq("rescan")))
         q2.processAllAvailable(); q2.stop()
         assert(stub.indices("anns")._2("1").path("annotations").toString == """["rescan"]""")
         assert(EsRest.count(conf, "anns") == 2L)
-        assert(sink.failedByBatchId == Map(0L -> 0L, 1L -> 0L))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 0L, 1L -> 0L))
+      } finally rm(ckpt)
+    }
+  }
+
+  test("driver restart through start() resumes the total; the replay counts once") {
+    withStub { stub =>
+      val ckpt = tempDir("restart")
+      try {
+        stub.rejectIds.add("3"); stub.rejectIds.add("7")
+        val conf = EsConf(stub.url, retryBackoffMs = 5)
+        implicit val sqlCtx = spark.sqlContext
+        val mem = MemoryStream[(Long, Seq[String])]
+        val stream = mem.toDF.toDF("doc_id", "annotations")
+        mem.addData((1L, Seq("a")), (3L, Seq("rejected")), (7L, Seq("rejected")))
+        val a = sinkOf(conf)
+        val q1 = a.start(stream, ckpt.toString, Trigger.ProcessingTime(0))
+        q1.processAllAvailable(); q1.stop()
+        assert(a.failedTotal == 2L)
+        val updatesAfterFirstRun =
+          stub.bulkBodies.asScala.count(_.contains("\"update\""))
+
+        // the driver dies after batch 0's sink work, before its commit
+        Files.delete(ckpt.resolve("commits").resolve("0"))
+        Files.deleteIfExists(ckpt.resolve("commits").resolve(".0.crc"))
+        val b = sinkOf(conf)
+        val q2 = b.start(stream, ckpt.toString, Trigger.ProcessingTime(0))
+        assert(b.failedTotal == 2L, "a restarted sink must resume its total at start()")
+        q2.processAllAvailable(); q2.stop()
+
+        assert(stub.bulkBodies.asScala.count(_.contains("\"update\"")) > updatesAfterFirstRun,
+          "restart after a torn commit must re-send the batch")
+        assert(b.failedTotal == 2L, s"the replay must count once: ${b.failedTotal}")
+        assert(b.failedByBatchId(ckpt.toString) == Map(0L -> 2L))
       } finally rm(ckpt)
     }
   }
@@ -88,11 +132,11 @@ class EsStreamingSinkSpec extends SparkSuite {
       val ckpt = tempDir("backoff")
       try {
         val conf = EsConf(stub.url, retryBackoffMs = 5)
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations")
+        val sink = sinkOf(conf)
         implicit val sqlCtx = spark.sqlContext
         val mem = MemoryStream[(Long, Seq[String])]
         val q = sink.start(mem.toDF.toDF("doc_id", "annotations"), ckpt.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+          Trigger.ProcessingTime(0))
 
         mem.addData((1L, Seq("a")))
         q.processAllAvailable()
@@ -118,21 +162,21 @@ class EsStreamingSinkSpec extends SparkSuite {
       try {
         stub.rejectIds.add("3"); stub.rejectIds.add("7")
         val conf = EsConf(stub.url, retryBackoffMs = 5)
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations")
+        val sink = sinkOf(conf)
         implicit val sqlCtx = spark.sqlContext
         val mem = MemoryStream[(Long, Seq[String])]
         val q = sink.start(mem.toDF.toDF("doc_id", "annotations"), ckpt.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+          Trigger.ProcessingTime(0))
 
         mem.addData((1L, Seq("a")), (3L, Seq("rejected")))
         q.processAllAvailable()
-        assert(sink.failedByBatchId == Map(0L -> 1L))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 1L))
 
         mem.addData((7L, Seq("rejected")), (8L, Seq("b")))
         q.processAllAvailable(); q.stop()
 
         // the running total is the reference's end-of-run docs_failed
-        assert(sink.failedByBatchId == Map(0L -> 1L, 1L -> 1L))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 1L, 1L -> 1L))
         assert(sink.failedTotal == 2L)
         // accepted siblings landed despite the rejects in both triggers
         assert(EsRest.count(conf, "anns") == 2L)
@@ -143,33 +187,35 @@ class EsStreamingSinkSpec extends SparkSuite {
 
   test("accounting window is bounded: eviction keeps the total, replay-in-window still overwrites") {
     withStub { stub =>
-      Seq("1", "2", "3", "4").foreach(stub.rejectIds.add)
+      (1 to 6).foreach(i => stub.rejectIds.add(i.toString))
       val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-        retainBatches = 2)
-      implicit val sqlCtx = spark.sqlContext
-      def batchOf(id: Long) =
-        Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-      sink.processBatch(batchOf(1L), 0L)
-      sink.processBatch(batchOf(2L), 1L)
-      sink.processBatch(batchOf(3L), 2L)
-      // batch 0 evicted from the window, never from the total
-      assert(sink.failedByBatchId == Map(1L -> 1L, 2L -> 1L))
-      assert(sink.failedTotal == 3L)
-      // a replay of the NEWEST batch (the only batch Spark ever replays)
-      // overwrites in place: total stays single-counted
-      sink.processBatch(batchOf(3L), 2L)
-      assert(sink.failedByBatchId == Map(1L -> 1L, 2L -> 1L))
-      assert(sink.failedTotal == 3L)
-      // NEW LINEAGE (fresh checkpoint restarts ids at 0): the window
-      // resets so the low id is tracked — and its replay still counts
-      // once instead of being evicted-then-double-counted
-      sink.processBatch(batchOf(4L), 0L)
-      assert(sink.failedByBatchId == Map(0L -> 1L))
-      assert(sink.failedTotal == 4L)
-      sink.processBatch(batchOf(4L), 0L) // replay of the new lineage's batch 0
-      assert(sink.failedByBatchId == Map(0L -> 1L))
-      assert(sink.failedTotal == 4L)
+      val ckpt = tempDir("retain")
+      try {
+        // a scoped session: the shared test session's conf is never written
+        val session = spark.newSession()
+        session.conf.set(SQLConf.MIN_BATCHES_TO_RETAIN.key, "2")
+        def sessionBatchOf(id: Long) =
+          session.createDataFrame(Seq((id, Seq("rejected")))).toDF("doc_id", "annotations")
+        val sink = sinkOf(conf)
+        (0 to 4).foreach(b => sink.processBatch(sessionBatchOf(b + 1L), b.toLong, ckpt.toString))
+        // batches 0-2 purged from the log, never from the running total
+        assert(sink.failedByBatchId(ckpt.toString) == Map(3L -> 1L, 4L -> 1L))
+        assert(logNames(ckpt).filterNot(_.startsWith(".")) == Set("3", "4"))
+        assert(sink.failedTotal == 5L)
+        // a replay of the NEWEST batch (the only batch Spark ever replays)
+        // overwrites in place: the total stays single-counted
+        sink.processBatch(sessionBatchOf(5L), 4L, ckpt.toString)
+        assert(sink.failedByBatchId(ckpt.toString) == Map(3L -> 1L, 4L -> 1L))
+        assert(sink.failedTotal == 5L)
+        // at the smallest retention a replayed batch's log holds only its
+        // own entry: the replay backs that entry out of the total
+        session.conf.set(SQLConf.MIN_BATCHES_TO_RETAIN.key, "1")
+        sink.processBatch(sessionBatchOf(6L), 5L, ckpt.toString)
+        assert(logNames(ckpt).filterNot(_.startsWith(".")) == Set("5"))
+        sink.processBatch(sessionBatchOf(6L), 5L, ckpt.toString)
+        assert(sink.failedTotal == 6L)
+        assert(spark.conf.get(SQLConf.MIN_BATCHES_TO_RETAIN.key) == "100")
+      } finally rm(ckpt)
     }
   }
 
@@ -177,153 +223,110 @@ class EsStreamingSinkSpec extends SparkSuite {
     withStub { stub =>
       Seq("1", "2", "3").foreach(stub.rejectIds.add)
       val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("acct")
+      val ckpt = tempDir("acct")
       try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          retainBatches = 2, accountingDir = Some(dir.toString))
-        a.processBatch(batchOf(1L), 0L)
-        a.processBatch(batchOf(2L), 1L)
-        a.processBatch(batchOf(3L), 2L) // evicts batch 0 (and its file)
+        val a = sinkOf(conf)
+        a.processBatch(batchOf(1L), 0L, ckpt.toString)
+        a.processBatch(batchOf(2L), 1L, ckpt.toString)
+        a.processBatch(batchOf(3L), 2L, ckpt.toString)
         assert(a.failedTotal == 3L)
-        // driver restart: a NEW instance on the same dir resumes instead
-        // of zeroing (the reference's persisted failed-docs log)
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          retainBatches = 2, accountingDir = Some(dir.toString))
-        assert(b.failedTotal == 3L, "restart must not zero the running total")
-        assert(b.failedByBatchId == Map(1L -> 1L, 2L -> 1L),
-          s"window must reload (evicted batch 0 stays evicted): ${b.failedByBatchId}")
+        // driver restart: a NEW instance reads the same checkpoint's log
+        // (the reference's persisted failed-docs log)
+        val b = sinkOf(conf)
+        assert(b.failedByBatchId(ckpt.toString) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
         // the crash that CAUSED the restart replays the newest batch —
         // still exactly-once in the accounting
-        b.processBatch(batchOf(3L), 2L)
+        b.processBatch(batchOf(3L), 2L, ckpt.toString)
         assert(b.failedTotal == 3L)
         // and new work keeps accumulating durably
-        b.processBatch(batchOf(2L), 3L)
-        val c = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          retainBatches = 2, accountingDir = Some(dir.toString))
-        assert(c.failedTotal == 4L && c.failedByBatchId == Map(2L -> 1L, 3L -> 1L))
-      } finally rm(dir)
+        b.processBatch(batchOf(2L), 3L, ckpt.toString)
+        assert(b.failedTotal == 4L)
+        val c = sinkOf(conf)
+        assert(c.failedByBatchId(ckpt.toString) ==
+          Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
+      } finally rm(ckpt)
     }
   }
 
-  test("durable accounting survives a torn newest file: load skips it and seeds from the previous one") {
+  test("a corrupt failed-doc log entry fails loudly, naming the file") {
     withStub { stub =>
       Seq("1", "2").foreach(stub.rejectIds.add)
       val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("torn")
+      val ckpt = tempDir("torn")
       try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        a.processBatch(batchOf(1L), 0L)
-        a.processBatch(batchOf(2L), 1L)
+        val a = sinkOf(conf)
+        a.processBatch(batchOf(1L), 0L, ckpt.toString)
+        a.processBatch(batchOf(2L), 1L, ckpt.toString)
         assert(a.failedTotal == 2L)
-        // the crash scenario the atomic rename prevents, simulated for a
-        // non-atomic FS: the NEWEST file is truncated to zero bytes —
-        // load must neither throw (wedged restarts) nor zero the total
-        Files.write(dir.resolve("epoch=0.batch=2.json"), Array.emptyByteArray)
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        assert(b.failedTotal == 2L,
-          "a torn newest file must fall back to the previous parseable one")
-        assert(b.failedByBatchId == Map(0L -> 1L, 1L -> 1L))
-        // garbage files are likewise skipped, not thrown on
-        Files.write(dir.resolve("epoch=0.batch=3.json"),
-          "{not json".getBytes("UTF-8"))
-        val c = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        assert(c.failedTotal == 2L)
-      } finally rm(dir)
+        // the atomic writer never leaves a partial entry, so a garbage or
+        // empty one can only come from outside — report it, like Spark's
+        // own logs, rather than silently resume from an older total
+        val log = ckpt.resolve("graft_failed_docs")
+        // drop the checksum sidecar, so the entry's content is what fails
+        Files.deleteIfExists(log.resolve(".2.crc"))
+        for (garbage <- Seq("{not json", "", """{"failed":1}""")) {
+          Files.write(log.resolve("2"), garbage.getBytes("UTF-8"))
+          val e = intercept[IOException](a.failedTotal)
+          assert(e.getMessage.contains("graft_failed_docs/2"), e.getMessage)
+          intercept[IOException](a.failedByBatchId(ckpt.toString))
+        }
+        intercept[IOException](a.processBatch(batchOf(2L), 3L, ckpt.toString))
+      } finally rm(ckpt)
     }
   }
 
-  test("lineage epochs: equal batchIds across checkpoint lineages get distinct durable keys, totals carry over") {
-    withStub { stub =>
-      Seq("1", "2", "3").foreach(stub.rejectIds.add)
-      val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("lineage")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        a.ensureLineage("ckpt-uuid-A")
-        a.processBatch(batchOf(1L), 0L)
-        a.processBatch(batchOf(2L), 1L)
-        assert(a.lineageEpoch == 0L && a.failedTotal == 2L)
-
-        // checkpoint deleted and recreated: new query id, SAME batchId 0 —
-        // the heuristic (batchId < window min) cannot see this collision;
-        // the lineage tag can
-        a.ensureLineage("ckpt-uuid-B")
-        assert(a.lineageEpoch == 1L)
-        assert(a.failedByBatchId.isEmpty, "old lineage's window must reset")
-        a.processBatch(batchOf(3L), 0L)
-        // batch 0 of lineage B is NEW work, not a replay of lineage A's
-        // batch 0: the total accumulates across the boundary
-        assert(a.failedTotal == 3L,
-          s"totals must carry across the lineage boundary: ${a.failedTotal}")
-        assert(a.failedByBatchId == Map(0L -> 1L))
-        // distinct durable keys: the new lineage's file is epoch-qualified;
-        // the old lineage's files are RETAINED (it may be a live co-tenant
-        // — see the interleave test; whole epochs age out past
-        // retainEpochs, pinned below) and its window stays readable by tag
-        val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
-        assert(names.contains("epoch=1.batch=0.json"), s"saw $names")
-        assert(names.contains("epoch=0.batch=0.json") &&
-          names.contains("epoch=0.batch=1.json"),
-          s"a superseded-but-maybe-live lineage's files must be retained: $names")
-        assert(a.failedByBatchId("ckpt-uuid-A") == Map(0L -> 1L, 1L -> 1L))
-
-        // a restarted driver resumes the NEW lineage's state
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        assert(b.lineageEpoch == 1L && b.failedTotal == 3L &&
-          b.failedByBatchId == Map(0L -> 1L))
-        // replay of lineage B's batch 0 against the restarted sink still
-        // single-counts (same-lineage tag is a no-op)
-        b.ensureLineage("ckpt-uuid-B")
-        b.processBatch(batchOf(3L), 0L)
-        assert(b.failedTotal == 3L)
-      } finally rm(dir)
-    }
+  /** One stream of `rows` through `sink.start` on `ckpt`, drained and stopped. */
+  private def runStream(sink: EsUpsertSink, ckpt: Path, rows: (Long, Seq[String])*): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Seq[String])]
+    mem.addData(rows)
+    val q = sink.start(mem.toDF.toDF("doc_id", "annotations"), ckpt.toString,
+      Trigger.ProcessingTime(0))
+    q.processAllAvailable(); q.stop()
   }
 
-  test("start() feeds the checkpoint query id into the lineage: delete-checkpoint-restart opens a new epoch") {
+  test("per-checkpoint logs: equal batchIds in two checkpoints stay apart") {
     withStub { stub =>
-      stub.rejectIds.add("9")
+      Seq("8", "9").foreach(stub.rejectIds.add)
       val conf = EsConf(stub.url, retryBackoffMs = 5)
       val ckpt1 = tempDir("lin-ck1"); val ckpt2 = tempDir("lin-ck2")
-      val dir = tempDir("lin-acct")
       try {
-        implicit val sqlCtx = spark.sqlContext
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        val mem1 = MemoryStream[(Long, Seq[String])]
-        mem1.addData((1L, Seq("a")), (9L, Seq("rejected")))
-        val q1 = sink.start(mem1.toDF.toDF("doc_id", "annotations"), ckpt1.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        q1.processAllAvailable(); q1.stop()
-        assert(sink.lineageEpoch == 0L && sink.failedTotal == 1L)
+        val sink = sinkOf(conf)
+        runStream(sink, ckpt1, (1L, Seq("a")), (9L, Seq("rejected")))
+        runStream(sink, ckpt2, (8L, Seq("rejected")), (9L, Seq("rejected")))
+        // both checkpoints have a batch 0; neither overwrites the other
+        assert(sink.failedByBatchId(ckpt1.toString) == Map(0L -> 1L))
+        assert(sink.failedByBatchId(ckpt2.toString) == Map(0L -> 2L))
+        assert(sink.failedTotal == 3L)
+        // a new instance that sees both checkpoints resumes both totals
+        val next = sinkOf(conf)
+        next.processBatch(batchOf(9L), 1L, ckpt1.toString)
+        next.processBatch(batchOf(1L), 1L, ckpt2.toString)
+        assert(next.failedTotal == 4L, s"ckpt1 (1+1) + ckpt2 (2+0): ${next.failedTotal}")
+      } finally { rm(ckpt1); rm(ckpt2) }
+    }
+  }
 
-        // "delete the checkpoint and restart" — a fresh checkpoint dir has
-        // a fresh query id; its batch 0 must not conflate with ckpt1's
-        val mem2 = MemoryStream[(Long, Seq[String])]
-        mem2.addData((9L, Seq("rejected")))
-        val q2 = sink.start(mem2.toDF.toDF("doc_id", "annotations"), ckpt2.toString,
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
-        q2.processAllAvailable(); q2.stop()
-        assert(sink.lineageEpoch == 1L,
-          s"a new checkpoint id must open a new epoch: ${sink.lineageEpoch}")
-        assert(sink.failedTotal == 2L,
-          s"batch 0 of each lineage counts once each: ${sink.failedTotal}")
-        assert(sink.failedByBatchId == Map(0L -> 1L))
-      } finally { rm(ckpt1); rm(ckpt2); rm(dir) }
+  test("start() on a recreated checkpoint starts an empty failed-doc log") {
+    withStub { stub =>
+      Seq("8", "9").foreach(stub.rejectIds.add)
+      val conf = EsConf(stub.url, retryBackoffMs = 5)
+      val ckpt = tempDir("recreate")
+      try {
+        val sink = sinkOf(conf)
+        runStream(sink, ckpt, (1L, Seq("a")), (9L, Seq("rejected")))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 1L))
+        assert(sink.failedTotal == 1L)
+
+        // delete the checkpoint and restart on the same path: the new
+        // lineage's batch 0 is new work in an empty log, and the deleted
+        // lineage's counts went with its offsets and commits
+        rm(ckpt); Files.createDirectories(ckpt)
+        runStream(sink, ckpt, (8L, Seq("rejected")), (9L, Seq("rejected")))
+        assert(sink.failedByBatchId(ckpt.toString) == Map(0L -> 2L))
+        assert(sink.failedTotal == 2L, s"only the recreated lineage counts: ${sink.failedTotal}")
+        assert(logNames(ckpt).filterNot(_.startsWith(".")) == Set("0"))
+      } finally rm(ckpt)
     }
   }
 
@@ -331,53 +334,34 @@ class EsStreamingSinkSpec extends SparkSuite {
     withStub { stub =>
       (1 to 9).foreach(i => stub.rejectIds.add(i.toString))
       val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("interleave")
+      val ckptA = tempDir("interleave-a"); val ckptB = tempDir("interleave-b")
+      val (a, b) = (ckptA.toString, ckptB.toString)
       try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        // triggers arrive interleaved, each declaring its own lineage —
-        // the r17 ping-pong would bump the epoch and clear the window on
-        // EVERY switch; tag-keyed epochs must instead accumulate both
-        sink.processBatch(batchOf(1L), 0L, Some("ckpt-A"))
-        sink.processBatch(batchOf(2L), 0L, Some("ckpt-B"))
-        sink.processBatch(batchOf(3L), 1L, Some("ckpt-A"))
-        sink.processBatch(batchOf(4L), 1L, Some("ckpt-B"))
-        sink.processBatch(batchOf(5L), 2L, Some("ckpt-A"))
-        assert(sink.failedByBatchId("ckpt-A") == Map(0L -> 1L, 1L -> 1L, 2L -> 1L),
-          s"A's window: ${sink.failedByBatchId("ckpt-A")}")
-        assert(sink.failedByBatchId("ckpt-B") == Map(0L -> 1L, 1L -> 1L),
-          s"B's window: ${sink.failedByBatchId("ckpt-B")}")
+        val sink = sinkOf(conf)
+        sink.processBatch(batchOf(1L), 0L, a)
+        sink.processBatch(batchOf(2L), 0L, b)
+        sink.processBatch(batchOf(3L), 1L, a)
+        sink.processBatch(batchOf(4L), 1L, b)
+        sink.processBatch(batchOf(5L), 2L, a)
+        assert(sink.failedByBatchId(a) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
+        assert(sink.failedByBatchId(b) == Map(0L -> 1L, 1L -> 1L))
         assert(sink.failedTotal == 5L)
-        // a replay on either lineage still single-counts
-        sink.processBatch(batchOf(4L), 1L, Some("ckpt-B"))
+        // a replay on either checkpoint still single-counts
+        sink.processBatch(batchOf(4L), 1L, b)
         assert(sink.failedTotal == 5L)
-        assert(sink.failedByBatchId("ckpt-B") == Map(0L -> 1L, 1L -> 1L))
-        // the no-arg view tracks the most recent trigger's lineage
-        assert(sink.failedByBatchId == Map(0L -> 1L, 1L -> 1L))
-        // A writes once more AFTER B's replay: the chronologically newest
-        // file now lives in the LOWER epoch
-        sink.processBatch(batchOf(6L), 3L, Some("ckpt-A"))
+        assert(sink.failedByBatchId(b) == Map(0L -> 1L, 1L -> 1L))
+        sink.processBatch(batchOf(6L), 3L, a)
         assert(sink.failedTotal == 6L)
 
-        // restart: BOTH windows reload, and the resumed total is the
-        // chronologically newest write (seq order) — (epoch, batchId)
-        // order would wrongly pick B's epoch-1 file (cumTotal 5) over A's
-        // later epoch-0 write (cumTotal 6)
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        assert(b.failedTotal == 6L,
-          s"resumed total must follow seq order, not epoch order: ${b.failedTotal}")
-        assert(b.failedByBatchId("ckpt-A") ==
-          Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
-        assert(b.failedByBatchId("ckpt-B") == Map(0L -> 1L, 1L -> 1L))
-        // both lineages keep accumulating after the restart
-        b.processBatch(batchOf(7L), 2L, Some("ckpt-B"))
-        assert(b.failedTotal == 7L)
-        assert(b.failedByBatchId("ckpt-B") == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
-      } finally rm(dir)
+        // restart: a new instance resumes each checkpoint's own total
+        val next = sinkOf(conf)
+        next.processBatch(batchOf(6L), 3L, a) // A's replay
+        assert(next.failedTotal == 4L)
+        next.processBatch(batchOf(7L), 2L, b) // B's new work
+        assert(next.failedTotal == 7L)
+        assert(next.failedByBatchId(a) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
+        assert(next.failedByBatchId(b) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
+      } finally { rm(ckptA); rm(ckptB) }
     }
   }
 
@@ -385,129 +369,27 @@ class EsStreamingSinkSpec extends SparkSuite {
     withStub { stub =>
       Seq("1", "2").foreach(stub.rejectIds.add)
       val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("crash")
+      val ckpt = tempDir("crash")
       try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        a.processBatch(batchOf(1L), 0L)
-        a.processBatch(batchOf(2L), 1L)
-        // the kill-inside-the-window state: a replay overwrite of batch 1
-        // died after writing the temp but before the rename — the final
-        // file still carries the pre-crash content, the temp must be
-        // ignored (the rename-OVERWRITE path never deletes the final
-        // first, so no state with a MISSING batch file exists)
-        Files.write(dir.resolve(".tmp.epoch=0.batch=1.json"),
-          """{"failed":99,"cumTotal":999,"epoch":0,"seq":99}""".getBytes("UTF-8"))
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
+        val a = sinkOf(conf)
+        a.processBatch(batchOf(1L), 0L, ckpt.toString)
+        a.processBatch(batchOf(2L), 1L, ckpt.toString)
+        // a replay overwrite of batch 1 died after writing the atomic
+        // writer's dot-prefixed temp file but before the rename; stray
+        // checksum sidecars sit beside the entries
+        val log = ckpt.resolve("graft_failed_docs")
+        Files.write(log.resolve(".1.0b5e7c1d-temp.tmp"),
+          """{"failed":99,"total":999}""".getBytes("UTF-8"))
+        Files.write(log.resolve(".7.crc"), "not an entry".getBytes("UTF-8"))
+        assert(logNames(ckpt).count(_.endsWith(".crc")) >= 2, logNames(ckpt))
+        val b = sinkOf(conf)
+        assert(b.failedByBatchId(ckpt.toString) == Map(0L -> 1L, 1L -> 1L),
+          "temp and .crc files must not read as entries")
+        // the interrupted replay, re-run, converges
+        b.processBatch(batchOf(2L), 1L, ckpt.toString)
         assert(b.failedTotal == 2L,
           "a leftover temp file must not contaminate the resumed total")
-        assert(b.failedByBatchId == Map(0L -> 1L, 1L -> 1L))
-        // and the interrupted replay, re-run, converges
-        b.processBatch(batchOf(2L), 1L)
-        assert(b.failedTotal == 2L)
-      } finally rm(dir)
-    }
-  }
-
-  test("legacy batch=<id>.json files migrate to epoch-qualified names once at load (ADVICE r17)") {
-    withStub { stub =>
-      Seq("1", "2").foreach(stub.rejectIds.add)
-      val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("legacy")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        // a pre-epoch directory: one lone legacy file, plus one batch
-        // that ALSO has an epoch-qualified duplicate (the replay/evict
-        // gap the old code could leave — the qualified file is newer)
-        Files.write(dir.resolve("batch=0.json"),
-          """{"failed":1,"cumTotal":1}""".getBytes("UTF-8"))
-        Files.write(dir.resolve("batch=1.json"),
-          """{"failed":5,"cumTotal":9}""".getBytes("UTF-8"))
-        Files.write(dir.resolve("epoch=0.batch=1.json"),
-          """{"failed":1,"cumTotal":2,"epoch":0}""".getBytes("UTF-8"))
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          retainBatches = 2, accountingDir = Some(dir.toString))
-        // the qualified duplicate wins; the stale legacy twin is deleted,
-        // the lone legacy file is renamed in place
-        assert(a.failedTotal == 2L, s"duplicate resolution: ${a.failedTotal}")
-        assert(a.failedByBatchId == Map(0L -> 1L, 1L -> 1L))
-        // drop the local-FS ChecksumFileSystem's hidden .crc sidecars —
-        // an FS artifact, not accounting state
-        val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.startsWith(".")).toSet
-        assert(names == Set("epoch=0.batch=0.json", "epoch=0.batch=1.json"),
-          s"migration must leave exactly one name per (epoch, batch): $names")
-        // post-migration eviction has exactly one name to manage: a new
-        // batch evicts batch 0's (migrated) file, no orphan twin remains
-        a.processBatch(batchOf(1L), 2L)
-        val after = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.startsWith(".")).toSet
-        assert(after == Set("epoch=0.batch=1.json", "epoch=0.batch=2.json"),
-          s"eviction after migration: $after")
-      } finally rm(dir)
-    }
-  }
-
-  test("epochs age out past retainEpochs: windows and files stay bounded under restart churn") {
-    withStub { stub =>
-      (1 to 9).foreach(i => stub.rejectIds.add(i.toString))
-      val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("aging")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        def batchOf(id: Long) =
-          Seq((id, Seq("rejected"))).toDF("doc_id", "annotations")
-        val sink = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString), retainEpochs = 2)
-        (1 to 5).foreach { i =>
-          sink.ensureLineage(s"ckpt-$i")
-          sink.processBatch(batchOf(i.toLong), 0L)
-        }
-        // five lineages, retention two: only the two newest epochs keep
-        // files; the total still counts every lineage's batch
-        assert(sink.failedTotal == 5L)
-        val names = Files.list(dir).iterator().asScala.map(_.getFileName.toString)
-          .filterNot(_.startsWith(".")).toSet // ignore local-FS .crc sidecars
-        assert(names == Set("epoch=3.batch=0.json", "epoch=4.batch=0.json"),
-          s"aged-out epochs must drop their files: $names")
-        assert(sink.failedByBatchId("ckpt-5") == Map(0L -> 1L))
-        assert(sink.failedByBatchId("ckpt-1").isEmpty,
-          "an aged-out lineage reads as empty, not stale")
-        // a restart resumes from the surviving epochs
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString), retainEpochs = 2)
-        assert(b.failedTotal == 5L && b.failedByBatchId("ckpt-5") == Map(0L -> 1L))
-      } finally rm(dir)
-    }
-  }
-
-  test("a lineage tag with JSON metacharacters survives the persist round-trip (ADVICE r17)") {
-    withStub { stub =>
-      stub.rejectIds.add("1")
-      val conf = EsConf(stub.url, retryBackoffMs = 5)
-      val dir = tempDir("quoting")
-      try {
-        implicit val sqlCtx = spark.sqlContext
-        val evil = """lineage "with" \backslashes\ and "quotes""""
-        val a = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        a.ensureLineage(evil)
-        a.processBatch(Seq((1L, Seq("rejected"))).toDF("doc_id", "annotations"), 0L)
-        assert(a.failedTotal == 1L)
-        // the old string-interpolated JSON made this file unparseable and
-        // the tolerant loader silently zeroed the resumed total
-        val b = new EsUpsertSink(conf, "anns", "doc_id", "annotations",
-          accountingDir = Some(dir.toString))
-        assert(b.failedTotal == 1L,
-          "a metacharacter tag must not produce an unparseable epoch")
-        assert(b.failedByBatchId(evil) == Map(0L -> 1L))
-      } finally rm(dir)
+      } finally rm(ckpt)
     }
   }
 }
