@@ -1,16 +1,22 @@
 package graft
 
-/** Typed mirror of the reference's YAML query surface: the 17 mapping
-  * parameters of `AnnotationIndexerConfig`
-  * (`ingester/annotations_indexer.py:18-49`) plus source/sink/NLP blocks
-  * (`config/config.yml:1-73`), with the reference's config quirks fixed and
-  * documented:
+/** Typed mirror of the reference's YAML query surface
+  * (`ingester/annotations_indexer.py:18-49`, `config/config.yml:1-73`),
+  * holding the fields [[graft.streaming.IngestJob]] reads, with the
+  * reference's config quirks fixed:
   *
-  *  - `skip-processed-doc-check: true` ENABLES the check in the reference
-  *    (`annotations_indexer.py:252` vs `README.md:86`); here the flag is
-  *    named for what it does: [[checkAlreadyProcessed]].
-  *  - date segments are half-open `[start, end)` (the reference's inclusive
-  *    ends double-process boundary days, `annotations_indexer.py:847-857`).
+  *  - the already-processed check (F2, `skip-processed-doc-check`, whose
+  *    `true` ENABLES the check in the reference: `annotations_indexer.py:252`
+  *    vs `README.md:86`) is not a flag here: the job's checkpoint and
+  *    watermark dedup always apply it, so the F3 polarity bug has no field
+  *    to live in;
+  *  - the date range is half-open `[dateStart, dateEnd)` (the reference's
+  *    inclusive ends double-process boundary days,
+  *    `annotations_indexer.py:847-857`), and one catch-up run covers it
+  *    instead of a loop of `interval` segments; a checkpoint keeps the
+  *    range it started with;
+  *  - the short-text minimum is the reference's constant
+  *    (`AnnotationPipeline.MinTextLen`), not a setting.
   */
 final case class PipelineConfig(
     // source (config.yml:3-24)
@@ -18,22 +24,12 @@ final case class PipelineConfig(
     textField: String = "text",            // config.yml:53 'document'
     docIdField: String = "doc_id",         // config.yml:54 '_id'
     dateField: String = "dct",             // config.yml:58
-    dateFormat: String = "yyyy-MM-dd",     // config.yml:59
     // batching (config.yml:57-64)
     dateStart: Option[String] = None,
     dateEnd: Option[String] = None,
-    intervalDays: Int = 30,                // config.yml:61
-    // filters
-    minTextLen: Int = 5,                   // annotations_indexer.py:66
-    checkAlreadyProcessed: Boolean = false, // fixed-polarity F3 (config.yml:65)
     // projection (config.yml:55-56, 66-70)
     persistFields: Seq[String] = Seq("doc_id"),
     splitIndexByField: Option[String] = None, // config.yml:66
     useNestedObjects: Boolean = false,        // config.yml:67
-    annIdField: String = "id",                // config.yml:69
-    // NLP (config.yml:26-39)
-    nlpEndpoints: Seq[String] = Seq.empty,
-    maxRetriesOnFailure: Int = 1,          // config.yml:39
-    // sink (config.yml:41-50)
-    sinkPath: String = "",
-    bulkMaxRecordsPerFile: Int = 10000)    // es_common.py:98 BULK_CHUNK_SIZE
+    // sink (config.yml:41-50): a parquet path or http(s)://host:port/<index>
+    sinkPath: String = "")

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -26,21 +27,47 @@ object Sinks {
     * (`ingester/annotations_indexer.py:214-218`): one directory partition per
     * normalized key value, written in a single job (the reference computes the
     * index name per record and issues per-index bulk calls). `mode` defaults
-    * to Overwrite for a fresh sink; segment loops pass Append so earlier
-    * segments survive.
+    * to Overwrite for a fresh sink; Append adds to an existing layout.
     */
   def writePartitioned(
       df: DataFrame,
       path: String,
       splitField: String,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    // backtick-quote unless the caller already did: sink columns carry
-    // literal dots (`nlp.id`) that col() would parse as field access
-    val ref = if (splitField.startsWith("`")) splitField else s"`$splitField`"
-    df.withColumn("__part", TextFunctions.normalizeIndexName(col(ref)))
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    df.withColumn("__part", partValue(splitField))
       .write.mode(mode)
       .partitionBy("__part")
       .parquet(path)
+
+  /** K4 + K5 — [[upsert]] into the [[writePartitioned]] layout: each split
+    * value's `__part=<value>` directory is its own store, merged by `keyCol`
+    * alone. A batch rewrites only the partitions it touches, so a replayed
+    * batch converges and a later batch never truncates another's
+    * partitions. `batch` is read once for its split values and once per
+    * touched partition; a caller whose batch is costly to recompute caches
+    * it first.
+    */
+  def upsertPartitioned(
+      spark: SparkSession,
+      batch: DataFrame,
+      path: String,
+      keyCol: String,
+      splitField: String): Unit = {
+    val parted = batch.withColumn("__part", partValue(splitField))
+    parted.select("__part").distinct().collect().map(_.getString(0)).foreach { v =>
+      // the directory name the partitioned writer gives this value
+      val dir = ExternalCatalogUtils.getPartitionPathString("__part",
+        if (v == null || v.isEmpty) ExternalCatalogUtils.DEFAULT_PARTITION_NAME else v)
+      upsert(spark, parted.filter(col("__part") <=> lit(v)).drop("__part"), s"$path/$dir", keyCol)
+    }
+  }
+
+  /** The K4 partition value: `splitField`'s value, P5-normalized. */
+  private def partValue(splitField: String): Column = {
+    // backtick-quote unless the caller already did: sink columns carry
+    // literal dots (`nlp.id`) that col() would parse as field access
+    val ref = if (splitField.startsWith("`")) splitField else s"`$splitField`"
+    TextFunctions.normalizeIndexName(col(ref))
   }
 
   /** JSONL (newline-delimited JSON) sink — the interchange format most

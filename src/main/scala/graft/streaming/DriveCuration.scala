@@ -94,19 +94,9 @@ object DriveCuration {
     // 4. annotate + upsert. A doc with zero annotations still upserts (the
     // curated corpus IS the index content, annotations ride along) and a
     // throwing doc contributes an empty array instead of failing the batch
-    import spark.implicits._
-    val annotated = survivors
-      .select(col("doc_id").cast("long"), col("text"), col("lang"), col("source"))
-      .as[DriveStreaming.SrcDoc]
-      .mapPartitions { it =>
-        it.map { d =>
-          val anns =
-            try tagger.annotate(NlpService.Doc(d.doc_id, d.text)).map(_.cui)
-            catch { case _: Exception => Seq.empty[String] }
-          (d.doc_id, d.lang, d.source, anns)
-        }
-      }
-      .toDF("doc_id", "lang", "source", "annotations")
+    val docs = survivors.select(col("doc_id").cast("long"), col("text"), col("lang"), col("source"))
+    val annotated = NlpService.annotateRows(docs, tagger)
+      .select(col("doc_id"), col("lang"), col("source"), col("annotations.cui").as("annotations"))
     val failed = sink.upsert(spark, annotated, batchId)
     // survivors is snapshotted — counting it re-reads the snapshot, not
     // the admission pipeline (and annotated is row-for-row survivors)
@@ -188,14 +178,7 @@ object DriveCuration {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val docsPath = s"$srcDir/documents.parquet"
-    val schema = spark.read.parquet(docsPath).schema
-    val f = new java.io.File(docsPath)
-    val source =
-      if (f.isFile)
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", f.getName).parquet(f.getParent)
-      else spark.readStream.schema(schema).parquet(docsPath)
+    val source = IngestJob.source(spark, s"$srcDir/documents.parquet")
     val q = start(source, s"$work/store", s"$work/card",
       ParquetSink(s"$work/curated"), s"$work/ckpt",
       new NlpService.MockTagger(AnnotationPipeline.DefaultTerms),

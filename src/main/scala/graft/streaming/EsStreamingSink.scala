@@ -27,8 +27,7 @@ import graft.sources.EsRest
   *    annotations array wholesale and the `upsert` document inserts absent
   *    ids, so re-applying a micro-batch converges to the same index state —
   *    at-least-once delivery upgrades to effectively-exactly-once, the same
-  *    argument [[StreamingPipeline.startUpsertSink]] makes for the parquet
-  *    K5 face.
+  *    argument [[IngestJob]] makes for its parquet K5 face.
   *  - **Failed-doc accounting lives in the checkpoint.** Each checkpoint
   *    owns one log, `<checkpoint>/graft_failed_docs/<batchId>`, whose
   *    entries hold `{"failed": n, "total": t}` with `t` that checkpoint's

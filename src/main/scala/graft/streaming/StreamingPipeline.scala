@@ -1,46 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
-import graft.operators.AnnotationPipeline
-import graft.sources.Sinks
-
-/** Structured-Streaming form of the ingestion pipeline (the north-star
-  * approach, BASELINE.json): the reference's hand-rolled date-segment loop
-  * (B1, `ingester/annotations_indexer.py:842-861`) becomes micro-batches
-  * with checkpointed state, and its re-query-the-sink dedup (F2) becomes
-  * `dropDuplicatesWithinWatermark` — bounded state, no sink round-trips.
-  *
-  * The reference's inclusive segment boundaries double-process boundary-date
-  * documents (`ingester/es_common.py:316-319`); event-time windows here are
-  * half-open `[start, end)`, so every document is assigned exactly once.
+/** Structured-Streaming building blocks beside the ingest job itself
+  * ([[IngestJob]]): stream–static enrichment, windowed and session
+  * aggregation with watermarks, a stream–stream interval join, and keyed
+  * state gates. Event-time windows are half-open `[start, end)`, so every
+  * event is assigned exactly once (the reference's inclusive segment
+  * boundaries double-process boundary dates,
+  * `ingester/es_common.py:316-319`).
   */
 object StreamingPipeline {
-
-  /** Streaming source over a parquet directory (file source — each new file
-    * is a micro-batch input; `Trigger.AvailableNow` drains the backlog and
-    * stops, the catch-up semantics of the reference's `index_range`).
-    */
-  def docStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).parquet(path)
-
-  /** The annotate pipeline on a stream: F1 filter → watermark + streaming
-    * dedup on doc_id (F2's replacement) → dictionary annotate → flat records.
-    * `eventTimeCol` must be a timestamp column for the watermark.
-    */
-  def annotateStream(
-      docs: DataFrame,
-      eventTimeCol: String,
-      watermark: String = "1 hour",
-      terms: Seq[String] = AnnotationPipeline.DefaultTerms): DataFrame = {
-    val filtered = AnnotationPipeline.filterValidText(docs)
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark("doc_id")
-    AnnotationPipeline.annotateDictionary(filtered, terms)
-  }
 
   /** Stream–static enrichment: join each micro-batch against a STATIC
     * dimension relation — the stateless streaming-join form (no watermark,
@@ -58,24 +29,6 @@ object StreamingPipeline {
       dim: DataFrame,
       keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
-
-  /** K5 upsert sink for a stream: foreachBatch read-merge-overwrite keyed by
-    * the composite annotation key. Exactly-once under retries: the merge is
-    * idempotent (same keys → same survivors), so a replayed batch converges.
-    */
-  def startUpsertSink(
-      annotated: DataFrame,
-      path: String,
-      keyCol: String,
-      checkpoint: String): StreamingQuery =
-    annotated.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Sinks.upsert(batch.sparkSession, batch, path, keyCol)
-      }
-      .start()
 
   /** Windowed event aggregation with watermarked late-data handling — the
     * streaming twin of StreamQueries.q60 (the reference's late-data story is

@@ -6,8 +6,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.{AnnotationPipeline, NlpService}
 import graft.sources.Sinks
-import graft.streaming.StreamingPipeline
+import graft.streaming.{IngestJob, StreamingPipeline}
 
 case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
 
@@ -15,6 +16,8 @@ class StreamingSpec extends SparkSuite {
   import spark.implicits._
 
   private def t(s: String) = Timestamp.valueOf(s)
+
+  private val tagger = new NlpService.MockTagger(AnnotationPipeline.DefaultTerms)
 
   test("windowed streaming agg over MemoryStream matches batch result") {
     implicit val sqlCtx = spark.sqlContext
@@ -91,10 +94,10 @@ class StreamingSpec extends SparkSuite {
       (1L, "stream with join inside", t("2024-01-01 00:00:30")), // dup replay
       (2L, "another merge text", t("2024-01-01 00:01:00")))
     val docs = mem.toDF().toDF("doc_id", "text", "ts")
-    val anns = StreamingPipeline.annotateStream(docs, "ts", "10 minutes")
+    val anns = IngestJob.annotated(docs, PipelineConfig(sourcePath = "", dateField = "ts"), tagger)
     val q = anns.writeStream.outputMode("append").format("memory").queryName("dd").start()
     q.processAllAvailable(); q.stop()
-    val got = spark.table("dd").select("doc_id", "term").collect()
+    val got = spark.table("dd").select("`meta.doc_id`", "`nlp.detected_name`").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     // doc 1 contributes its annotations exactly once despite the replay
     assert(got.count(_ == (1L, "join")) == 1)
@@ -192,21 +195,14 @@ class StreamingSpec extends SparkSuite {
         .toDF("doc_id", "text", "ts")
     def writeBatch(ids: Range): Unit =
       mkBatch(ids).write.mode("append").parquet(srcDir)
-    val schema = mkBatch(0 until 1).schema
-    def runOnce(): Unit = {
-      val stream = StreamingPipeline.docStream(spark, srcDir, schema)
-      val anns = StreamingPipeline.annotateStream(stream, "ts")
-        .select($"doc_id", $"term",
-          concat(lit("doc-"), $"doc_id", lit("-"), $"term").as("ann_key"))
-      val q = StreamingPipeline.startUpsertSink(anns, sinkDir, "ann_key", ckpt)
-      q.awaitTermination()
-    }
+    val cfg = PipelineConfig(sourcePath = srcDir, sinkPath = sinkDir, dateField = "ts")
+    def runOnce(): Unit = IngestJob.start(spark, cfg, tagger, ckpt).awaitTermination()
     writeBatch(0 until 10)
     runOnce()
     assert(spark.read.parquet(sinkDir).count() == 10)
     writeBatch(100 until 105) // new files appended to the same dir
     runOnce()
-    val all = spark.read.parquet(sinkDir).select("doc_id").as[Long].collect().toSet
+    val all = spark.read.parquet(sinkDir).select("`meta.doc_id`").as[Long].collect().toSet
     assert(all == ((0L until 10L) ++ (100L until 105L)).toSet,
       "restart must process exactly the new files once")
   }
@@ -256,15 +252,11 @@ class StreamingSpec extends SparkSuite {
     val docs = Tables.documents(spark, sfDir).limit(50)
       .withColumn("ts", lit(t("2024-01-01 00:00:00")))
     docs.write.mode("overwrite").parquet(srcDir)
-    val stream = StreamingPipeline.docStream(spark, srcDir,
-      docs.schema)
-    val anns = StreamingPipeline.annotateStream(stream, "ts")
-      .select($"doc_id", $"term",
-        concat(lit("doc-"), $"doc_id", lit("-"), $"term").as("ann_key"))
-    val q = StreamingPipeline.startUpsertSink(anns, sinkDir, "ann_key", ckpt)
-    q.awaitTermination()
+    IngestJob.start(spark, PipelineConfig(sourcePath = srcDir, sinkPath = sinkDir, dateField = "ts"),
+      tagger, ckpt).awaitTermination()
     val streamedCount = spark.read.parquet(sinkDir).count()
-    val batchCount = graft.operators.AnnotationPipeline.annotateDictionary(docs).count()
+    val batchCount = AnnotationPipeline.annotateDictionary(
+      AnnotationPipeline.filterValidText(docs)).count()
     assert(streamedCount == batchCount)
   }
 
