@@ -117,10 +117,15 @@ object DriveCuration {
       EsRest.bulkUpsertAnnotations(annotated, conf, index, "doc_id", "annotations")
   }
 
-  /** Parquet K5 face — same replace-wholesale upsert semantics. */
+  /** Parquet K5 face — same replace-wholesale upsert semantics. The batch
+    * is cached because the merge reads it twice and each read would re-run
+    * the tagger.
+    */
   final case class ParquetSink(path: String) extends CurationSink {
     def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long): Long = {
-      Sinks.upsert(spark, annotated, path, "doc_id"); 0L
+      annotated.persist()
+      try Sinks.upsert(spark, annotated, path, "doc_id") finally annotated.unpersist()
+      0L
     }
   }
 

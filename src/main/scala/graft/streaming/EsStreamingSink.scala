@@ -49,41 +49,10 @@ import graft.sources.EsRest
   * ES index itself plus one tiny file per retained batch.
   */
 class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: String) {
-
-  private[this] val mapper = new ObjectMapper()
+  import EsUpsertSink._
 
   // qualified log dirs of every checkpoint this instance started or processed
   private[this] val logs = ConcurrentHashMap.newKeySet[Path]()
-
-  private def hadoopConf =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  private def logDir(checkpoint: String): Path = {
-    val dir = new Path(checkpoint, "graft_failed_docs")
-    dir.getFileSystem(hadoopConf).makeQualified(dir)
-  }
-
-  /** Batch id → entry file. Only names that parse as a batch id count, so
-    * the writer's dot-prefixed temp files and `.crc` sidecars never do.
-    */
-  private def entries(fm: CheckpointFileManager, dir: Path): TreeMap[Long, Path] =
-    if (!fm.exists(dir)) TreeMap.empty
-    else TreeMap.from(fm.list(dir).iterator.flatMap { st =>
-      st.getPath.getName.toLongOption.map(_ -> st.getPath)
-    })
-
-  /** (failed, total) of one entry; the atomic writer never leaves a
-    * partial file, so an unreadable one is corruption from outside.
-    */
-  private def read(fm: CheckpointFileManager, p: Path): (Long, Long) = {
-    val in = fm.open(p)
-    val tree = try mapper.readTree(in) catch { case _: JsonProcessingException => null } finally in.close()
-    if (tree == null || !tree.path("failed").isIntegralNumber || !tree.path("total").isIntegralNumber)
-      throw new IOException(s"corrupt failed-doc log entry $p")
-    (tree.get("failed").asLong, tree.get("total").asLong)
-  }
 
   /** Failed-item counts of the retained batches in `checkpoint`'s log
     * (batchId → failures), replay-stable.
@@ -95,14 +64,9 @@ class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: St
   }
 
   /** Total failed docs over every checkpoint this instance has started or
-    * processed — each log's newest running total, so replayed batches
-    * count once (the reference's end-of-run `docs_failed`,
-    * `es_common.py:208-210`).
+    * processed: the sum of each log's [[EsUpsertSink.failedTotal]].
     */
-  def failedTotal: Long = logs.asScala.iterator.map { dir =>
-    val fm = CheckpointFileManager.create(dir, hadoopConf)
-    entries(fm, dir).lastOption.fold(0L) { case (_, p) => read(fm, p)._2 }
-  }.sum
+  def failedTotal: Long = logs.asScala.iterator.map(newestTotal).sum
 
   /** The foreachBatch body: one scripted-bulk-upsert pass for this
     * micro-batch, then its entry in `checkpoint`'s failed-doc log. Public
@@ -148,4 +112,51 @@ class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: St
       .foreachBatch((batch: DataFrame, batchId: Long) => processBatch(batch, batchId, checkpoint))
       .start()
   }
+}
+
+object EsUpsertSink {
+
+  private val mapper = new ObjectMapper()
+
+  private def hadoopConf =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
+  private def logDir(checkpoint: String): Path = {
+    val dir = new Path(checkpoint, "graft_failed_docs")
+    dir.getFileSystem(hadoopConf).makeQualified(dir)
+  }
+
+  /** Batch id → entry file. Only names that parse as a batch id count, so
+    * the writer's dot-prefixed temp files and `.crc` sidecars never do.
+    */
+  private def entries(fm: CheckpointFileManager, dir: Path): TreeMap[Long, Path] =
+    if (!fm.exists(dir)) TreeMap.empty
+    else TreeMap.from(fm.list(dir).iterator.flatMap { st =>
+      st.getPath.getName.toLongOption.map(_ -> st.getPath)
+    })
+
+  /** (failed, total) of one entry; the atomic writer never leaves a
+    * partial file, so an unreadable one is corruption from outside.
+    */
+  private def read(fm: CheckpointFileManager, p: Path): (Long, Long) = {
+    val in = fm.open(p)
+    val tree = try mapper.readTree(in) catch { case _: JsonProcessingException => null } finally in.close()
+    if (tree == null || !tree.path("failed").isIntegralNumber || !tree.path("total").isIntegralNumber)
+      throw new IOException(s"corrupt failed-doc log entry $p")
+    (tree.get("failed").asLong, tree.get("total").asLong)
+  }
+
+  private def newestTotal(dir: Path): Long = {
+    val fm = CheckpointFileManager.create(dir, hadoopConf)
+    entries(fm, dir).lastOption.fold(0L) { case (_, p) => read(fm, p)._2 }
+  }
+
+  /** Failed docs of every run on `checkpoint`, read from its log alone:
+    * the newest entry's running total, so replayed batches count once (the
+    * reference's end-of-run `docs_failed`, `es_common.py:208-210`); 0 when
+    * no batch has been written.
+    */
+  def failedTotal(checkpoint: String): Long = newestTotal(logDir(checkpoint))
 }

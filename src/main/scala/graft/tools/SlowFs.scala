@@ -6,14 +6,18 @@ import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
+import graft.sources.ForklessRawLocalFileSystem
+
 /** Latency-injecting Hadoop filesystem (`slow://`) — the object-store
-  * simulator behind [[BenchSlowFs]]. Wraps [[RawLocalFileSystem]] and
+  * simulator behind [[BenchSlowFs]]. Wraps [[ForklessRawLocalFileSystem]] and
   * sleeps a configurable per-operation latency before every metadata and
   * open/create call, approximating an S3-class store where each PUT/GET/
   * HEAD/LIST is a ~tens-of-ms round trip rather than a local syscall
   * (data transfer itself stays local: the simulation prices the REQUEST
   * overhead, which is what dominates small-file snapshot-store traffic —
-  * parquet footers, commit markers, directory listings).
+  * parquet footers, commit markers, directory listings). The base class
+  * forks no `chmod` or `readlink`, so the injected latency is the only
+  * per-operation cost it adds.
   *
   * Latency knobs (Hadoop conf, milliseconds):
   *   - `fs.slow.latency.ms`        — metadata ops: getFileStatus, listStatus,
@@ -27,7 +31,7 @@ import org.apache.hadoop.util.Progressable
   * write/read then pays the simulated round trips while the corpus scan
   * stays on fast local parquet, isolating the store's FS sensitivity.
   */
-class SlowFs extends RawLocalFileSystem {
+class SlowFs extends ForklessRawLocalFileSystem {
 
   private def metaMs: Long = getConf.getLong("fs.slow.latency.ms", 25L)
   private def mutateMs: Long = getConf.getLong("fs.slow.mutate.latency.ms", 50L)

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.util.LongAccumulator
 
 import graft.operators.{AnnotationPipeline, IncrementalAgg, NlpService}
 import graft.sources.EsRest
@@ -166,6 +167,26 @@ class DriveCurationSpec extends SparkSuite {
     }
   }
 
+  test("parquet face tags each survivor once per batch") {
+    val work = tempDir("tagcount")
+    try {
+      val calls = spark.sparkContext.longAccumulator("curation-tagger-calls")
+      val counting = new CountingTagger(calls)
+      val sink = DriveCuration.ParquetSink(s"$work/index")
+      // batch 0 admits 1 of {1, 2, 6}; batch 1 admits 4 of {3, 4} and
+      // merges into the store batch 0 wrote
+      Seq(Seq(allDocs(0), allDocs(1), allDocs(5)), Seq(allDocs(2), allDocs(3)))
+        .zipWithIndex.foreach { case (docs, id) =>
+          calls.reset()
+          val (n, _) = DriveCuration.curateBatch(spark, df(docs), s"$work/store",
+            s"$work/card", sink, counting, id.toLong, minTokens = 10L, maxStopwordRatio = 0.5)
+          assert(n == 1L && calls.value == n, s"batch $id: ${calls.value} tagger calls for $n survivors")
+        }
+      assert(spark.read.parquet(s"$work/index").select("doc_id").as[Long].collect().toSet ==
+        Set(1L, 4L))
+    } finally rm(work)
+  }
+
   test("countSurvivors=false skips the count action's jobs per trigger (VERDICT r17 #5)") {
     withStub { stub =>
       val w1 = tempDir("jobs1"); val w2 = tempDir("jobs2")
@@ -212,5 +233,13 @@ class DriveCurationSpec extends SparkSuite {
         } finally spark.sparkContext.removeSparkListener(listener)
       } finally { rm(w1); rm(w2) }
     }
+  }
+}
+
+/** The dictionary tagger, counting its calls across tasks. */
+private final class CountingTagger(calls: LongAccumulator) extends NlpService.Tagger {
+  private val inner = new NlpService.MockTagger(AnnotationPipeline.DefaultTerms)
+  def annotate(doc: NlpService.Doc): Seq[NlpService.Annotation] = {
+    calls.add(1L); inner.annotate(doc)
   }
 }

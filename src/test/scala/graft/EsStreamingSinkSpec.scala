@@ -303,6 +303,10 @@ class EsStreamingSinkSpec extends SparkSuite {
         next.processBatch(batchOf(9L), 1L, ckpt1.toString)
         next.processBatch(batchOf(1L), 1L, ckpt2.toString)
         assert(next.failedTotal == 4L, s"ckpt1 (1+1) + ckpt2 (2+0): ${next.failedTotal}")
+        // each checkpoint's total reads from its log alone, with no sink
+        assert(EsUpsertSink.failedTotal(ckpt1.toString) == 2L)
+        assert(EsUpsertSink.failedTotal(ckpt2.toString) == 2L)
+        assert(EsUpsertSink.failedTotal(tempDir("lin-none").toString) == 0L)
       } finally { rm(ckpt1); rm(ckpt2) }
     }
   }
