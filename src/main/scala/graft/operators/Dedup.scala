@@ -1641,15 +1641,14 @@ object Dedup {
 
   /** Reconstruct snapshot version `upToBatch` from the delta store:
     * union of partitions ≤ upToBatch ([[graft.sources.Sinks
-    * .readBatchStoreAsOf]] — inherits its compaction-horizon contract),
+    * .readBatchStore]] — inherits its compaction-horizon contract),
     * then last-writer-wins PER ID (`max snap_batch` keyed on `idCol`
     * alone — a delta that re-labels a doc's component or revises its
     * carried attribute must fully supersede the older row, never
     * coexist with it). Reads only COMMITTED partitions (the
-    * graft-owned `_graft_committed` marker, or `_SUCCESS` for
-    * pre-marker stores — the graft marker makes commit visibility
-    * independent of the cluster's job-committer config): a torn
-    * mid-crash delta is internally inconsistent for a LWW store, so
+    * graft-owned `_graft_committed` marker, which makes commit
+    * visibility independent of the cluster's job-committer config): a
+    * torn mid-crash delta is internally inconsistent for a LWW store, so
     * reconstruction falls back to the previous committed version until
     * the replay rewrites it. None when the store is empty; several
     * data partitions with NO marker anywhere throws rather than
@@ -1659,7 +1658,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       upToBatch: Long = Long.MaxValue,
       idCol: String = "doc_id"): Option[DataFrame] = {
-    graft.sources.Sinks.readBatchStoreAsOf(spark, path, upToBatch,
+    graft.sources.Sinks.readBatchStore(spark, path, upToBatch,
         requireCommitted = true).map { df =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(idCol)).orderBy(col("snap_batch").desc)

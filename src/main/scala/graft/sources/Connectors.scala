@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 
-import graft.PipelineConfig
-
 /** Source/sink connector option plumbing (reference S6/K1,
   * `ingester/es_common.py:14-85`): maps the engine's config onto Spark
   * connector options.
@@ -53,10 +51,6 @@ object Connectors {
     else
       reader.parquet(resource)
   }
-
-  /** Source reader for a pipeline config. */
-  def source(spark: SparkSession, cfg: PipelineConfig): DataFrame =
-    read(spark, cfg.sourcePath)
 
   /** S7 — fail-fast liveness probe (reference `check_url_available`,
     * `ingester/utils.py:7-14`: HTTP GET each endpoint, 10 s timeout, all

@@ -329,7 +329,7 @@ object Sinks {
     * writers). Matches the reference, whose per-run ES updates are also
     * last-writer-wins.
     */
-  private[graft] def replaceWith(spark: SparkSession, merged: DataFrame, path: String): Unit = {
+  private def replaceWith(spark: SparkSession, merged: DataFrame, path: String): Unit = {
     val dst = new Path(path)
     val tmp = new Path(dst.getParent, "." + dst.getName + "__tmp")
     val old = new Path(dst.getParent, "." + dst.getName + "__old")
@@ -484,9 +484,9 @@ object Sinks {
       s"$root has no col=value partition directories — use compact() for flat sinks")
     // refuse batch stores: their partitions carry graft side files (the
     // compaction manifest / commit marker) that a spark.read-and-rewrite
-    // would silently strip — voiding the time-travel horizon throw and, on
-    // a no-_SUCCESS cluster, making requireCommitted readers reject
-    // healthy data. Batch stores have their own compactBatchStore.
+    // would silently strip — voiding the time-travel horizon throw and
+    // making requireCommitted readers reject healthy data. Batch stores
+    // have their own compactBatchStore.
     parts.foreach { st =>
       require(
         !fs.exists(new Path(st.getPath, ManifestName)) &&
@@ -523,9 +523,8 @@ object Sinks {
   // Single-writer per store path, same contract as [[upsert]].
   //
   // Torn-read tolerance by consumer (a crash mid-write leaves a
-  // partition without a commit marker — the graft-owned [[CommitMarker]]
-  // written after the job returns, with _SUCCESS honored for pre-marker
-  // stores — until the replay rewrites it):
+  // partition without the graft-owned [[CommitMarker]], written after the
+  // job returns, until the replay rewrites it):
   //   - TEAR-TOLERANT (read with requireCommitted = false, the
   //     default): KMV partials (StreamingKmv — any subset of a partial
   //     is a valid partial), quantile bucket partials
@@ -545,16 +544,28 @@ object Sinks {
   private def batchDirId(name: String): Option[Long] =
     if (name.startsWith("batch=")) name.stripPrefix("batch=").toLongOption else None
 
-  /** Graft-owned per-partition commit marker. Tear-INTOLERANT consumers
-    * gate on this, not (only) on Spark's `_SUCCESS`: the job committer's
-    * marker is a cluster CONFIG (`mapreduce.fileoutputcommitter
-    * .marksuccessfuljobs=false` is common on object stores), and a store
-    * whose committed partitions merely LOOK uncommitted would silently
-    * reconstruct to None — for a LWW delta store that means rebuilding
-    * from the current batch alone and dropping history. Writing our own
-    * marker after the job returns makes commit visibility a property of
-    * the store, not of the committer config (`_SUCCESS` is still honored
-    * for pre-marker stores).
+  /** The batch ids a merged partition's manifest names as absorbed; empty
+    * for a partition no compaction wrote.
+    */
+  private def absorbedIds(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Seq[Long] = {
+    val m = new Path(dir, ManifestName)
+    if (!fs.exists(m)) return Seq.empty
+    val in = fs.open(m)
+    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    "-?\\d+".r.findAllIn(txt).map(_.toLong).toSeq
+  }
+
+  /** Graft-owned per-partition commit marker, the store's only one.
+    * Tear-INTOLERANT consumers gate on this, not on Spark's `_SUCCESS`:
+    * the job committer's marker is a cluster CONFIG
+    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false` is common
+    * on object stores), and a store whose committed partitions merely LOOK
+    * uncommitted would silently reconstruct to None — for a LWW delta
+    * store that means rebuilding from the current batch alone and
+    * dropping history. [[appendBatchPartition]] writes it after every
+    * write and [[compactBatchStore]] stages it before every publish, so
+    * commit visibility is a property of the store, not of the committer
+    * config.
     */
   private[graft] val CommitMarker = "_graft_committed"
 
@@ -606,36 +617,29 @@ object Sinks {
       .flatMap(e => if (e.isDirectory) batchDirId(e.getPath.getName).map(_ -> e.getPath) else None)
       .toSeq
     // absorbed partitions named by any manifest are stale duplicates
-    val absorbed = dirs.flatMap { case (_, dir) =>
-      val m = new Path(dir, ManifestName)
-      if (fs.exists(m)) {
-        val in = fs.open(m)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        "-?\\d+".r.findAllIn(txt).map(_.toLong).toSeq
-      } else Seq.empty
-    }.toSet
+    val absorbed = dirs.flatMap { case (_, dir) => absorbedIds(fs, dir) }.toSet
     dirs.filter { case (id, dir) =>
       if (absorbed(id)) { fs.delete(dir, true); false }
-      // a zero-survivor batch writes only _SUCCESS; a data-less dir would
+      // a zero-survivor batch writes only its markers; a data-less dir would
       // break multi-path schema inference and carries no rows — skip it
       else fs.listStatus(dir).exists(f =>
         f.isFile && f.getPath.getName.endsWith(".parquet"))
     }.sortBy(_._1)
   }
 
-  /** Read a batch store: union of its live partitions (absent → None).
-    * The partition ids are storage bookkeeping, not data — rows come back
-    * exactly as appended. `excludeBatch` drops one partition from the
-    * read: an admitter processing batch B must see history = batches < B,
-    * NOT a half-committed partition B left by a crashed previous attempt —
-    * including it would make the replay's re-ingestion guard skip rows the
-    * rewrite is about to overwrite (silent row loss on replay).
-    */
-  /** Time-travel read: the store exactly as of batch `upToBatch` — the
-    * union of partitions with id ≤ `upToBatch`. Valid because a merged
-    * (compacted) partition carries the id of its NEWEST absorbed batch
-    * and therefore contains only rows from batches ≤ its own id; any
-    * partition with a larger id is excluded wholesale.
+  /** Read a batch store as of batch `upToBatch`: the union of its live
+    * partitions with id ≤ `upToBatch` (None when there are none). The
+    * partition ids are storage bookkeeping, not data — rows come back
+    * exactly as appended. The default reads the whole store.
+    *
+    * Valid because a merged (compacted) partition carries the id of its
+    * NEWEST absorbed batch and therefore contains only rows from batches
+    * ≤ its own id; any partition with a larger id is excluded wholesale.
+    * An admitter processing batch B reads `upToBatch = B - 1`: history is
+    * batches < B, NOT a half-committed partition B left by a crashed
+    * previous attempt — including it would make the replay's
+    * re-ingestion guard skip rows the rewrite is about to overwrite
+    * (silent row loss on replay).
     *
     * The horizon contract (the same trade Delta's VACUUM makes): once a
     * compaction has absorbed batches ≤ `upToBatch` into a partition with
@@ -644,13 +648,12 @@ object Sinks {
     * `IllegalStateException`, never as a silently short read. Snapshots
     * at or above every merged partition's id remain exact forever.
     */
-  def readBatchStoreAsOf(
-      spark: SparkSession, path: String, upToBatch: Long,
+  def readBatchStore(
+      spark: SparkSession, path: String, upToBatch: Long = Long.MaxValue,
       requireCommitted: Boolean = false): Option[DataFrame] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // requireCommitted: skip partitions without a commit marker (the
-    // graft-owned [[CommitMarker]], or _SUCCESS for pre-marker stores) —
+    // requireCommitted: skip partitions without the [[CommitMarker]] —
     // a crash mid-write leaves a TORN partition that is a valid subset
     // for tear-tolerant partials (KMV/quantile: any subset of a partial
     // is a partial) but internally inconsistent for last-writer-wins
@@ -661,8 +664,7 @@ object Sinks {
     // from.
     val live = liveBatchDirs(fs, root)
     val dirs = live.filter { case (_, dir) =>
-      !requireCommitted || fs.exists(new Path(dir, CommitMarker)) ||
-        fs.exists(new Path(dir, "_SUCCESS"))
+      !requireCommitted || fs.exists(new Path(dir, CommitMarker))
     }
     // Under the single-writer sequential contract at most the NEWEST
     // partition can be uncommitted; a marker-less store is explainable as
@@ -671,8 +673,7 @@ object Sinks {
     // with data but no marker anywhere (several partitions; a lone
     // partition with id > 0, whose sequential predecessors must have
     // existed; a lone COMPACTED partition, whose manifest proves it
-    // absorbed committed history — e.g. a pre-marker store compacted on a
-    // cluster that writes no _SUCCESS) is a store this reader cannot
+    // absorbed committed history) is a store this reader cannot
     // interpret (foreign layout, or markers stripped). Falling back to
     // None there would silently present an EMPTY store and let a LWW
     // consumer rebuild from scratch over live history — fail loudly
@@ -684,25 +685,16 @@ object Sinks {
         throw new IllegalStateException(
           s"batch store at $path has ${live.size} data partition(s) " +
           s"(ids ${live.map(_._1).mkString(", ")}) but none carries a " +
-          "commit marker (_graft_committed or _SUCCESS): refusing to " +
-          "treat a marker-less store as empty")
+          s"commit marker ($CommitMarker): refusing to treat a marker-less " +
+          "store as empty")
     }
     // horizon check over ALL live partitions, not just commit-filtered
     // ones: a manifest-bearing merged partition is committed in fact (the
-    // marker lands in the staged dir BEFORE publish; pre-marker-era stores
-    // may simply lack both markers on a no-_SUCCESS cluster), and skipping
-    // it here would let a below-horizon time travel return a silently
-    // short/empty snapshot instead of the promised throw
+    // marker lands in the staged dir BEFORE publish), and skipping one
+    // whose marker was lost would let a below-horizon time travel return
+    // a silently short/empty snapshot instead of the promised throw
     val crossing = live.filter { case (id, dir) =>
-      id > upToBatch && {
-        val m = new Path(dir, ManifestName)
-        fs.exists(m) && {
-          val in = fs.open(m)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          "-?\\d+".r.findAllIn(txt).exists(_.toLong <= upToBatch)
-        }
-      }
+      id > upToBatch && absorbedIds(fs, dir).exists(_ <= upToBatch)
     }
     if (crossing.nonEmpty)
       throw new IllegalStateException(
@@ -711,17 +703,6 @@ object Sinks {
     val visible = dirs.filter(_._1 <= upToBatch)
     if (visible.isEmpty) None
     else Some(spark.read.parquet(visible.map(_._2.toString): _*))
-  }
-
-  def readBatchStore(
-      spark: SparkSession, path: String,
-      excludeBatch: Option[Long] = None): Option[DataFrame] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = liveBatchDirs(fs, root)
-      .filter { case (id, _) => !excludeBatch.contains(id) }
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs.map(_._2.toString): _*))
   }
 
   /** Merge every committed partition with id < `upToBatch` into the
@@ -753,24 +734,16 @@ object Sinks {
     // the manifest must be TRANSITIVE: absorbed partitions (and the target
     // itself, whose dir this rewrite replaces) may carry manifests from
     // earlier compactions — dropping those ids would let a later
-    // readBatchStoreAsOf below the horizon miss the crossing check and
+    // readBatchStore below the horizon miss the crossing check and
     // return a silently short snapshot instead of throwing
-    val inherited = eligible.flatMap { case (_, dir) =>
-      val m = new Path(dir, ManifestName)
-      if (fs.exists(m)) {
-        val in = fs.open(m)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        "-?\\d+".r.findAllIn(txt).map(_.toLong).toSeq
-      } else Seq.empty
-    }
-    val absorbedIds = (inherited ++ eligible.init.map(_._1)).distinct.sorted
+    val inherited = eligible.flatMap { case (_, dir) => absorbedIds(fs, dir) }
+    val absorbed = (inherited ++ eligible.init.map(_._1)).distinct.sorted
     val manifest = new Path(tmp, ManifestName)
     val out = fs.create(manifest, true)
-    try out.write(absorbedIds.mkString("[", ",", "]").getBytes("UTF-8"))
+    try out.write(absorbed.mkString("[", ",", "]").getBytes("UTF-8"))
     finally out.close()
     // the merged partition holds only already-committed rows — stamp the
-    // graft marker so requireCommitted readers see it even on clusters
-    // where the job committer writes no _SUCCESS
+    // marker before publish so requireCommitted readers never skip it
     fs.create(new Path(tmp, CommitMarker), true).close()
     val aside = new Path(root, "." + target.getName + "__old")
     fs.delete(aside, true)
@@ -782,69 +755,6 @@ object Sinks {
     fs.delete(aside, true)
     eligible.init.foreach { case (_, dir) => fs.delete(dir, true) }
     eligible.size
-  }
-
-  /** One-time migration of a flat upsert-layout store (part files at the
-    * root) into the batch-partitioned layout: the legacy rows become
-    * partition `batch=<id>`. Pure renames — no data rewrite. No-op when
-    * the root is absent or already partitioned.
-    *
-    * Also the store's HEAL point: before probing anything it repairs (a) a
-    * ROOT-level crashed swap — the previous flat layout's upsert dying
-    * between its two renames leaves the only copy in a hidden `.name__old`
-    * sibling, which a naive "root absent → no history" read would orphan
-    * forever — and (b) partition-level crash leftovers
-    * ([[liveBatchDirs]]). Callers that probe the store directly (the
-    * semantic cent_sim backfill) rely on this running FIRST.
-    */
-  def migrateFlatToBatchStore(spark: SparkSession, path: String, asBatchId: Long): Boolean = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healCrashedSwap(fs, root)
-    if (!fs.exists(root)) return false
-    liveBatchDirs(fs, root)
-    val entries = fs.listStatus(root)
-    val flat = entries.filter(e => e.isFile && !e.getPath.getName.startsWith("_"))
-    // flat files REMAINING counts as unfinished work even when batch dirs
-    // already exist: a crash mid-migration leaves some part files moved
-    // and some at the root, and an "already partitioned" early-return
-    // would orphan the root leftovers forever (readBatchStore only unions
-    // batch=* dirs) — silently losing that slice of admission history.
-    // Resuming the renames into the SAME target partition is idempotent.
-    if (flat.isEmpty) {
-      // heal a crash between the migration's final rename and its marker
-      // write: a batch partition at a NEGATIVE (reserved) id can only come
-      // from a completed migration of a complete flat store —
-      // appendBatchPartition refuses ids < 0 — so stamping a missing
-      // marker there is always safe
-      val dst0 = new Path(root, s"batch=$asBatchId")
-      if (asBatchId < 0 && fs.exists(dst0) &&
-          !fs.exists(new Path(dst0, CommitMarker)) &&
-          !fs.exists(new Path(dst0, "_SUCCESS")))
-        fs.create(new Path(dst0, CommitMarker), true).close()
-      return false
-    }
-    val dst = new Path(root, s"batch=$asBatchId")
-    fs.mkdirs(dst)
-    // data part files FIRST, underscore-prefixed files (_SUCCESS etc.)
-    // LAST: listStatus order is not guaranteed, and a crash after moving
-    // _SUCCESS but before the part files would leave a torn partition
-    // that requireCommitted readers accept as committed (_SUCCESS is
-    // honored there) — with _SUCCESS moved last, a mid-loop crash leaves
-    // the partition marker-less and invisible until the resume completes
-    val (markers, parts) =
-      entries.filter(_.isFile).partition(_.getPath.getName.startsWith("_"))
-    (parts ++ markers).foreach { e =>
-      if (!fs.rename(e.getPath, new Path(dst, e.getPath.getName)))
-        throw new java.io.IOException(s"failed to migrate ${e.getPath} into $dst")
-    }
-    // the flat store was a COMPLETE store (its writer finished before the
-    // layout existed), so the migrated partition is committed by
-    // construction — stamp the marker AFTER the last rename so
-    // requireCommitted readers accept it and a mid-migration crash leaves
-    // the partition invisible to them until the resume completes
-    fs.create(new Path(dst, CommitMarker), true).close()
-    true
   }
 
   /** K6 — nested-mode upsert: on key conflict, MERGE the `annotations`

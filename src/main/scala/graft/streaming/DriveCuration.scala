@@ -29,16 +29,19 @@ import graft.sources.{EsRest, Sinks}
   *     is resolved on read by merging partials (associative/commutative,
   *     so batch boundaries never change it).
   *  4. **Sink** — survivors annotated (U1 pooled tagger, B4 per-doc error
-  *     isolation) and committed via [[EsRest.bulkUpsertAnnotations]] — the
-  *     reference's K5 scripted upsert — when an [[EsRest.EsConf]] is
-  *     given, else the parquet K5 face ([[Sinks.upsert]]).
+  *     isolation) and committed via [[EsUpsertSink.processBatch]] — the
+  *     reference's K5 scripted upsert, its failed-doc count logged in the
+  *     query's checkpoint — when an [[EsRest.EsConf]] is given, else the
+  *     parquet K5 face ([[Sinks.upsert]]).
   *
   * Replay safety is the composition of each stage's own idempotence, all
   * keyed by the ONE checkpoint's batchId: a replayed batch re-derives the
   * same survivors (history excludes the current batchId), overwrites the
   * same store partitions, and the ES script replaces the annotations array
   * wholesale — so at-least-once delivery converges to the same three end
-  * states (admission store, card store, index). This is the streaming
+  * states (admission store, card store, index), and the ES face's
+  * failed-doc log counts a replayed batch once
+  * ([[EsUpsertSink.failedTotal]] on the checkpoint). This is the streaming
   * equivalence of the q95 batch composition: same gate, same dedup
   * survivor policy (greedy keep-lowest-id, exact on clique-shaped
   * clusters), same accounting — pinned in DriveCurationSpec.
@@ -54,8 +57,9 @@ object DriveCuration {
 
   /** One micro-batch of the curation composition. Public so specs (and a
     * recovery path) can drive the exact foreachBatch body directly —
-    * Spark calls it with the SAME batchId on replay. Returns (survivors
-    * admitted, docs failed at the sink).
+    * Spark calls it with the SAME batchId on replay. `checkpoint` is the
+    * query's checkpoint, where the ES face keeps its failed-doc log.
+    * Returns (survivors admitted, docs failed at the sink).
     *
     * `countSurvivors = false` skips the survivor count (returns −1 in its
     * place): the count is a snapshot re-read, not a recompute, but it is
@@ -72,6 +76,7 @@ object DriveCuration {
       sink: CurationSink,
       tagger: NlpService.Tagger,
       batchId: Long,
+      checkpoint: String,
       minTokens: Long = 40L,
       maxStopwordRatio: Double = 0.08,
       shingleK: Int = 3,
@@ -97,7 +102,7 @@ object DriveCuration {
     val docs = survivors.select(col("doc_id").cast("long"), col("text"), col("lang"), col("source"))
     val annotated = NlpService.annotateRows(docs, tagger)
       .select(col("doc_id"), col("lang"), col("source"), col("annotations.cui").as("annotations"))
-    val failed = sink.upsert(spark, annotated, batchId)
+    val failed = sink.upsert(spark, annotated, batchId, checkpoint)
     // survivors is snapshotted — counting it re-reads the snapshot, not
     // the admission pipeline (and annotated is row-for-row survivors)
     (if (countSurvivors) survivors.count() else -1L, failed)
@@ -108,13 +113,16 @@ object DriveCuration {
     * (and its end state comparable) where no cluster exists.
     */
   sealed trait CurationSink {
-    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long): Long
+    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long, checkpoint: String): Long
   }
 
-  /** K5 scripted bulk upsert over the live REST protocol. */
+  /** K5 scripted bulk upsert over the live REST protocol, through the
+    * streaming ES sink so the failed-doc count lands in the checkpoint.
+    */
   final case class EsSink(conf: EsRest.EsConf, index: String) extends CurationSink {
-    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long): Long =
-      EsRest.bulkUpsertAnnotations(annotated, conf, index, "doc_id", "annotations")
+    private val es = new EsUpsertSink(conf, index, "doc_id", "annotations")
+    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long, checkpoint: String): Long =
+      es.processBatch(annotated, batchId, checkpoint)
   }
 
   /** Parquet K5 face — same replace-wholesale upsert semantics. The batch
@@ -122,7 +130,7 @@ object DriveCuration {
     * the tagger.
     */
   final case class ParquetSink(path: String) extends CurationSink {
-    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long): Long = {
+    def upsert(spark: SparkSession, annotated: DataFrame, batchId: Long, checkpoint: String): Long = {
       annotated.persist()
       try Sinks.upsert(spark, annotated, path, "doc_id") finally annotated.unpersist()
       0L
@@ -161,7 +169,7 @@ object DriveCuration {
         // countSurvivors = false: the stream drops the return value, so
         // the per-trigger count job would be pure dispatch constant
         curateBatch(spark, batch, storePath, cardPath, sink, tagger, batchId,
-          minTokens, maxStopwordRatio, shingleK, threshold,
+          checkpointDir, minTokens, maxStopwordRatio, shingleK, threshold,
           countSurvivors = false)
         ()
       }

@@ -69,11 +69,13 @@ class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: St
   def failedTotal: Long = logs.asScala.iterator.map(newestTotal).sum
 
   /** The foreachBatch body: one scripted-bulk-upsert pass for this
-    * micro-batch, then its entry in `checkpoint`'s failed-doc log. Public
-    * so a recovery path can be driven directly in tests — Spark calls it
-    * with the SAME batchId on replay.
+    * micro-batch, then its entry in `checkpoint`'s failed-doc log; returns
+    * the batch's failed-doc count. Public so a recovery path can be driven
+    * directly in tests, and so a composed foreachBatch body can run it
+    * under its own query's checkpoint — Spark calls it with the SAME
+    * batchId on replay.
     */
-  def processBatch(batch: DataFrame, batchId: Long, checkpoint: String): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, checkpoint: String): Long = {
     val n = EsRest.bulkUpsertAnnotations(batch, conf, index, idCol, annCol)
     val dir = logDir(checkpoint)
     logs.add(dir)
@@ -93,6 +95,7 @@ class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: St
     } catch { case e: Throwable => out.cancel(); throw e }
     val retain = batch.sparkSession.conf.get(SQLConf.MIN_BATCHES_TO_RETAIN.key).toLong
     log.rangeTo(batchId - retain).valuesIterator.foreach(fm.delete)
+    n
   }
 
   /** Start the stream: annotated rows → per-trigger scripted ES upsert.
@@ -109,7 +112,9 @@ class EsUpsertSink(conf: EsRest.EsConf, index: String, idCol: String, annCol: St
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch((batch: DataFrame, batchId: Long) => processBatch(batch, batchId, checkpoint))
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        processBatch(batch, batchId, checkpoint); ()
+      }
       .start()
   }
 }

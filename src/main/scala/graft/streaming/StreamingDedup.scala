@@ -93,15 +93,11 @@ object StreamingDedup {
     // other failure (transient FS error, corrupt footer) propagates —
     // silently treating it as empty would skip the batch-vs-history
     // comparison and permanently admit duplicates (admission is final).
-    // Flat stores written by the retired upsert layout migrate in place
-    // (pure renames) the first time they are seen; the NEGATIVE partition
-    // id keeps legacy rows clear of every real batch id.
-    Sinks.migrateFlatToBatchStore(spark, storePath, asBatchId = -1L)
     // history = batches STRICTLY BEFORE this one: a crashed previous
     // attempt at THIS batch id may have appended a partition that the
     // rewrite below replaces — reading it as history would make the
     // re-ingestion guard drop exactly the rows being rewritten
-    val history = Sinks.readBatchStore(spark, storePath, excludeBatch = Some(batchId))
+    val history = Sinks.readBatchStore(spark, storePath, upToBatch = batchId - 1)
     val survivors = history match {
       case Some(store) =>
         // FUSED cross-history comparison ([[Dedup.admissionDropsBetween]]):

@@ -19,9 +19,9 @@ import graft.sources.Sinks
   * map-side, identical to the batch form); the history comparison joins
   * batch survivors to the store ON THE CELL KEY, so a batch never meets
   * more history than its own cells hold, and history×history is never
-  * recomputed. State = admitted (vec_id, centroid_id, embedding) rows,
-  * [[Sinks.upsert]]-keyed by vec_id — idempotent under micro-batch replay;
-  * at cluster scale the store is a mergeable table bucketed by
+  * recomputed. State = admitted (vec_id, centroid_id, cent_sim, embedding)
+  * rows, one store partition per batch — idempotent under micro-batch
+  * replay; at cluster scale the store is a mergeable table bucketed by
   * `centroid_id` so this join never shuffles history.
   *
   * The store side of each cell is capped at `maxStorePerCell` — the
@@ -44,13 +44,6 @@ import graft.sources.Sinks
   */
 object StreamingSemanticDedup {
 
-  // store paths whose legacy partition is known cent_sim-complete — the
-  // backfill probe (a listing + footer read per batch) runs once per store
-  // per JVM; a restart re-probes once, which is the correct cost. Safe
-  // under the store's single-writer contract.
-  private val backfillVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Admit one batch of (vec_id, embedding[, …]) rows: returns the
     * surviving rows (with their `centroid_id`) and appends them to the
     * store at `storePath` as partition `batch=<batchId>` (the replay-
@@ -69,41 +62,16 @@ object StreamingSemanticDedup {
     val centMap = map(cents.flatMap { case (cid, v) =>
       Seq(lit(cid), array(v.map(lit): _*))
     }: _*)
-    def centSim(embCol: org.apache.spark.sql.Column) =
-      Similarity.cosine(Similarity.toDoubleArray(embCol),
-        element_at(centMap, col("centroid_id")))
     val flagged = Dedup.semanticDedup(batch, cents, threshold, maxBucketSize)
     val within = flagged.filter(!col("is_dup")).drop("is_dup")
       // cent_sim is computed ONCE at admission and persisted with the row:
       // the cap window orders the store by a stored column instead of
       // re-running |store| cosine kernels every batch
-      .withColumn("cent_sim", centSim(col("embedding")))
+      .withColumn("cent_sim", Similarity.cosine(Similarity.toDoubleArray(col("embedding")),
+        element_at(centMap, col("centroid_id"))))
       // feeds the history comparison AND the survivor anti-join AND the
       // store update — snapshot so assignment + within-batch pairing run once
       .transform(Stage.snapshotDF)
-    // Flat stores from the retired upsert layout migrate in place (pure
-    // renames, negative partition id so no real batch can collide; the
-    // migrate call also HEALS crashed-swap leftovers first — root-level
-    // and partition-level — so the probe below never sees a half-swapped
-    // store). A migrated partition written before cent_sim existed is
-    // rewritten ONCE with the column backfilled — the multi-partition
-    // read below needs a uniform schema, and one bounded rewrite at
-    // migration time replaces the old per-batch on-the-fly backfill. The
-    // probe itself is memoized per JVM so a long-running stream doesn't
-    // pay a listing + footer read every batch.
-    Sinks.migrateFlatToBatchStore(spark, storePath, asBatchId = -1L)
-    if (!backfillVerified.contains(storePath)) {
-      val legacyPart = s"$storePath/batch=-1"
-      val legacyPath = new org.apache.hadoop.fs.Path(legacyPart)
-      val fs = legacyPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(legacyPath) &&
-          !spark.read.parquet(legacyPart).columns.contains("cent_sim")) {
-        val backfilled = spark.read.parquet(legacyPart)
-          .withColumn("cent_sim", centSim(col("embedding")))
-        Sinks.replaceWith(spark, backfilled, legacyPart)
-      }
-      backfillVerified.add(storePath)
-    }
     // ONE store HANDLE serves the comparison and the re-ingestion guard —
     // this saves the second listing, NOT the data scan: the handle is
     // lazy, so each consumer still scans the store once (deliberately not
@@ -113,7 +81,7 @@ object StreamingSemanticDedup {
     // decisions are final.
     // history = batches strictly before this one (same crashed-replay rule
     // as StreamingDedup: a prior attempt's own partition is not history)
-    val history = Sinks.readBatchStore(spark, storePath, excludeBatch = Some(batchId))
+    val history = Sinks.readBatchStore(spark, storePath, upToBatch = batchId - 1)
     val survivors = history match {
       case Some(store) =>
         // per-cell prefix rank, unconditional: a pre-check "fast path" was

@@ -36,8 +36,8 @@ class BatchStoreSpec extends SparkSuite {
     Sinks.appendBatchPartition(
       spark, Seq.empty[(Long, String)].toDF("id", "v"), store, 2L)
     assert(rows(store) == Set((1L, "a"), (2L, "b"), (3L, "c2")))
-    // excludeBatch: the admitter's history view omits the named partition
-    val hist = Sinks.readBatchStore(spark, store, excludeBatch = Some(1L)).get
+    // upToBatch: the admitter's history view (batch 1's) stops below it
+    val hist = Sinks.readBatchStore(spark, store, upToBatch = 0L).get
       .select("id").as[Long].collect().toSet
     assert(hist == Set(1L, 2L))
   }
@@ -62,16 +62,16 @@ class BatchStoreSpec extends SparkSuite {
     (0 to 4).foreach(i =>
       Sinks.appendBatchPartition(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), store, i.toLong))
     def asOf(b: Long): Set[(Long, String)] =
-      Sinks.readBatchStoreAsOf(spark, store, b).map(
+      Sinks.readBatchStore(spark, store, b).map(
         _.select("id", "v").as[(Long, String)].collect().toSet).getOrElse(Set.empty)
-    assert(Sinks.readBatchStoreAsOf(spark, store, -1L).isEmpty)
+    assert(Sinks.readBatchStore(spark, store, -1L).isEmpty)
     (0 to 4).foreach { b =>
       assert(asOf(b.toLong) == (0 to b).map(i => (i.toLong, s"v$i")).toSet, s"asOf $b")
     }
     // CDC between two snapshots composes with ChangeCapture
     val diff = graft.operators.ChangeCapture.snapshotDiff(
-      Sinks.readBatchStoreAsOf(spark, store, 1L).get,
-      Sinks.readBatchStoreAsOf(spark, store, 3L).get, Seq("id"))
+      Sinks.readBatchStore(spark, store, 1L).get,
+      Sinks.readBatchStore(spark, store, 3L).get, Seq("id"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(diff == Map(2L -> "insert", 3L -> "insert"))
 
@@ -90,7 +90,7 @@ class BatchStoreSpec extends SparkSuite {
     (0 to 4).foreach(i =>
       Sinks.appendBatchPartition(spark, Seq((i.toLong, s"v$i")).toDF("id", "v"), store, i.toLong))
     def asOf(b: Long): Set[(Long, String)] =
-      Sinks.readBatchStoreAsOf(spark, store, b).map(
+      Sinks.readBatchStore(spark, store, b).map(
         _.select("id", "v").as[(Long, String)].collect().toSet).getOrElse(Set.empty)
     // first compaction absorbs 0,1 into 2; second absorbs 2,3 into 4 —
     // partition 4's manifest must INHERIT {0,1} from partition 2's, or the
@@ -104,7 +104,7 @@ class BatchStoreSpec extends SparkSuite {
     }
     // pre-history stays a clean "store empty", not an error: nothing ≤ -1
     // was ever ingested OR absorbed
-    assert(Sinks.readBatchStoreAsOf(spark, store, -1L).isEmpty)
+    assert(Sinks.readBatchStore(spark, store, -1L).isEmpty)
   }
 
   test("crash between compaction renames self-heals: aside copy restored, no row lost") {
@@ -135,44 +135,6 @@ class BatchStoreSpec extends SparkSuite {
       "read lazily deletes manifest-absorbed leftovers")
   }
 
-  test("flat legacy store migrates via renames into a negative partition") {
-    val store = mkStore()
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(store)
-    assert(Sinks.migrateFlatToBatchStore(spark, store, asBatchId = -1L))
-    assert(rows(store) == Set((1L, "a"), (2L, "b")))
-    // second call is a no-op; appends coexist with the migrated partition
-    assert(!Sinks.migrateFlatToBatchStore(spark, store, asBatchId = -1L))
-    Sinks.appendBatchPartition(spark, Seq((3L, "c")).toDF("id", "v"), store, 0L)
-    assert(rows(store) == Set((1L, "a"), (2L, "b"), (3L, "c")))
-    // and compaction absorbs the legacy partition like any other
-    assert(Sinks.compactBatchStore(spark, store, upToBatch = 1L) == 2)
-    assert(rows(store) == Set((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
-  test("interrupted migration resumes: leftover flat files land, marker stamped") {
-    val store = mkStore()
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(2).write.parquet(store)
-    val fs = fsOf(store)
-    // simulate a crash mid-migration: one part file already moved
-    val dst = new Path(store, "batch=-1")
-    fs.mkdirs(dst)
-    val firstPart = fs.listStatus(new Path(store))
-      .filter(e => e.isFile && e.getPath.getName.endsWith(".parquet")).head.getPath
-    assert(fs.rename(firstPart, new Path(dst, firstPart.getName)))
-    // the resume must move the remaining files instead of declaring the
-    // store "already partitioned" and orphaning them
-    assert(Sinks.migrateFlatToBatchStore(spark, store, asBatchId = -1L))
-    assert(rows(store) == Set((1L, "a"), (2L, "b")))
-    assert(fs.exists(new Path(dst, Sinks.CommitMarker)),
-      "migrated partition must be stamped committed")
-    // crash between last rename and marker write: the follow-up call heals
-    assert(fs.delete(new Path(dst, Sinks.CommitMarker), false))
-    assert(fs.delete(new Path(dst, "_SUCCESS"), false))
-    assert(!Sinks.migrateFlatToBatchStore(spark, store, asBatchId = -1L))
-    assert(fs.exists(new Path(dst, Sinks.CommitMarker)),
-      "marker-crash heal must re-stamp the reserved migrated partition")
-  }
-
   test("horizon check sees marker-less merged partitions: sub-horizon read throws, never short") {
     val store = mkStore()
     (0 to 2).foreach { b =>
@@ -180,8 +142,8 @@ class BatchStoreSpec extends SparkSuite {
         Seq((b.toLong, s"v$b")).toDF("id", "v"), store, b.toLong)
     }
     assert(Sinks.compactBatchStore(spark, store, upToBatch = 3L) == 3)
-    // pre-marker-era compacted store on a no-_SUCCESS cluster: the merged
-    // partition carries a manifest but NO marker of either kind
+    // a compacted store whose merged partition lost its markers: it
+    // carries a manifest but NO marker of either kind
     val fs = fsOf(store)
     val merged = fs.listStatus(new Path(store))
       .filter(_.isDirectory).map(_.getPath)
@@ -196,7 +158,7 @@ class BatchStoreSpec extends SparkSuite {
     // marker-less merged partition's manifest and throw — not skip it in
     // the commit filter and return a silently short/empty snapshot
     val e = intercept[IllegalStateException] {
-      Sinks.readBatchStoreAsOf(spark, store, upToBatch = 0L, requireCommitted = true)
+      Sinks.readBatchStore(spark, store, upToBatch = 0L, requireCommitted = true)
     }
     assert(e.getMessage.contains("compaction horizon"), e.getMessage)
   }

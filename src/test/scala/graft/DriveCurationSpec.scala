@@ -130,7 +130,7 @@ class DriveCurationSpec extends SparkSuite {
         // must converge, not accumulate
         DriveCuration.curateBatch(spark,
           df(Seq(allDocs(4), allDocs(6), allDocs(7))),
-          store, card, sink, tagger, batchId = 2L,
+          store, card, sink, tagger, batchId = 2L, checkpoint = ckpt,
           minTokens = 10L, maxStopwordRatio = 0.5)
         assert(stub.indices("curated")._2.keySet == Set("1", "4", "8"))
         assert(stub.indices("curated")._2("8").path("annotations").toString ==
@@ -154,15 +154,45 @@ class DriveCurationSpec extends SparkSuite {
         // survivors) — partial/store/sink handling must not throw and the
         // card must not change
         val (n0, f0) = DriveCuration.curateBatch(spark, df(Seq(allDocs(0))),
-          store, card, sink, tagger, 0L, minTokens = 10L, maxStopwordRatio = 0.5)
+          store, card, sink, tagger, 0L, s"$work/ckpt", minTokens = 10L, maxStopwordRatio = 0.5)
         assert(n0 == 1L && f0 == 0L)
         val after0 = cardRows(DriveCuration.card(spark, card))
         val (n1, f1) = DriveCuration.curateBatch(spark,
           df(Seq(allDocs(5), allDocs(6))),
-          store, card, sink, tagger, 1L, minTokens = 10L, maxStopwordRatio = 0.5)
+          store, card, sink, tagger, 1L, s"$work/ckpt", minTokens = 10L, maxStopwordRatio = 0.5)
         assert(n1 == 0L && f1 == 0L)
         assert(cardRows(DriveCuration.card(spark, card)) == after0)
         assert(stub.indices("curated")._2.keySet == Set("1"))
+      } finally rm(work)
+    }
+  }
+
+  test("the ES face logs its failed docs in the query's checkpoint; a catch-up run with a replay counts them once") {
+    withStub { stub =>
+      val work = tempDir("failed")
+      try {
+        stub.rejectIds.add("4")
+        val conf = EsConf(stub.url, retryBackoffMs = 5)
+        val in = s"$work/in"; val ckpt = s"$work/ckpt"
+        def run(): Unit =
+          DriveCuration.start(graft.streaming.IngestJob.source(spark, in),
+            s"$work/store", s"$work/card", DriveCuration.EsSink(conf, "curated"), ckpt,
+            tagger, minTokens = 10L, maxStopwordRatio = 0.5).awaitTermination()
+        // survivors 1 and 4; the index rejects 4
+        df(Seq(allDocs(0), allDocs(3))).write.parquet(in)
+        run()
+        assert(graft.streaming.EsUpsertSink.failedTotal(ckpt) == 1L)
+        assert(stub.indices("curated")._2.keySet == Set("1"))
+        // catch-up run over one new file, after dropping batch 0's commit so
+        // the run first replays batch 0 (its rejection again) under the same id
+        val commit = new java.io.File(s"$ckpt/commits/0")
+        assert(commit.exists && commit.delete())
+        new java.io.File(s"$ckpt/commits/.0.crc").delete()
+        df(Seq(allDocs(7))).write.mode("append").parquet(in)
+        run()
+        assert(stub.indices("curated")._2.keySet == Set("1", "8"))
+        assert(graft.streaming.EsUpsertSink.failedTotal(ckpt) == 1L,
+          "the replayed batch's rejection must count once")
       } finally rm(work)
     }
   }
@@ -179,7 +209,8 @@ class DriveCurationSpec extends SparkSuite {
         .zipWithIndex.foreach { case (docs, id) =>
           calls.reset()
           val (n, _) = DriveCuration.curateBatch(spark, df(docs), s"$work/store",
-            s"$work/card", sink, counting, id.toLong, minTokens = 10L, maxStopwordRatio = 0.5)
+            s"$work/card", sink, counting, id.toLong, s"$work/ckpt",
+            minTokens = 10L, maxStopwordRatio = 0.5)
           assert(n == 1L && calls.value == n, s"batch $id: ${calls.value} tagger calls for $n survivors")
         }
       assert(spark.read.parquet(s"$work/index").select("doc_id").as[Long].collect().toSet ==
@@ -207,7 +238,7 @@ class DriveCurationSpec extends SparkSuite {
             jobs.set(0)
             val (n, _) = DriveCuration.curateBatch(spark, df(Seq(allDocs(0))),
               s"$work/store", s"$work/card",
-              DriveCuration.EsSink(conf, "curated"), tagger, 0L,
+              DriveCuration.EsSink(conf, "curated"), tagger, 0L, s"$work/ckpt",
               minTokens = 10L, maxStopwordRatio = 0.5, countSurvivors = count)
             assert(if (count) n == 1L else n == -1L)
             // let the async listener bus drain before reading the counter

@@ -165,26 +165,31 @@ class StreamingDedupSpec extends SparkSuite {
     assert(s2.isEmpty, s"history near-dup must be rejected, got $s2")
   }
 
-  test("upgrade heal: a flat store crashed mid-swap is recovered, never read as empty history") {
-    // the pre-round-9 upsert layout's worst crash state: the store path is
-    // ABSENT and the hidden .name__old aside holds the only copy of the
-    // admitted shingle index. The admitter must heal it (via the migrate
-    // call's root-level healCrashedSwap), not conclude "no history" and
-    // re-admit known duplicates forever.
-    val base = Files.createTempDirectory("sd-upgrade").toString
-    val store = base + "/store"
-    val history = Dedup.shingleIndex(
-      Seq((1L, baseA), (2L, baseB)).toDF("doc_id", "text"), "doc_id", "text", 3)
-    history.write.parquet(base + "/.store__old") // crashed-swap aside copy
-    // batch: a near-dup of history doc 1 under a NEW id → must be rejected
-    val echo = Seq((50L, mutate(baseA))).toDF("doc_id", "text")
-    val out = StreamingDedup.admitBatch(spark, echo, "doc_id", "text", store, batchId = 0L)
-      .select("doc_id").as[Long].collect()
-    assert(out.isEmpty, s"healed history must reject the replayed near-dup, got ${out.toSeq}")
-    // and the recovered store now lives in the batch layout with both docs
-    val ids = graft.sources.Sinks.readBatchStore(spark, store).get
-      .select("__id").distinct().as[Long].collect().toSet
-    assert(ids == Set(1L, 2L), s"recovered store must hold the prior postings, got $ids")
+  test("admission replay after a compaction: same survivors, store unchanged, no horizon throw") {
+    val store = Files.createTempDirectory("sd-compact").toString + "/store"
+    val baseD = "delta " + (1 to 30).map(i => s"d$i").mkString(" ")
+    def admit(docs: Seq[(Long, String)], batchId: Long): Set[Long] =
+      StreamingDedup.admitBatch(spark, docs.toDF("doc_id", "text"), "doc_id", "text",
+        store, batchId).select("doc_id").as[Long].collect().toSet
+    def storeRows(): Seq[String] =
+      graft.sources.Sinks.readBatchStore(spark, store).get
+        .collect().map(_.toString).sorted.toSeq
+    val c = 3L
+    Seq(baseA, baseB, baseC).zipWithIndex.foreach { case (t, b) =>
+      assert(admit(Seq((b + 1L, t)), b.toLong) == Set(b + 1L))
+    }
+    // merge batches 0..c-1 into partition c-1, as the drivers do before batch c
+    assert(graft.sources.Sinks.compactBatchStore(spark, store, upToBatch = c) == 3)
+    // batch c: a near-dup of batch 0's doc (dropped through the merged
+    // history) and a new doc; the second run is the replay, which must
+    // not read the first run's own partition as history
+    val batch = Seq((10L, mutate(baseA)), (11L, baseD))
+    val first = admit(batch, c)
+    val rowsAfterFirst = storeRows()
+    val replay = admit(batch, c)
+    assert(first == Set(11L), s"first run survivors: $first")
+    assert(replay == first, s"replay survivors: $replay")
+    assert(storeRows() == rowsAfterFirst, "the replay must rewrite its partition unchanged")
   }
 
   test("streaming admission dedups within batch and against history; replay is idempotent") {

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions._
-
 import graft.streaming.StreamingSemanticDedup
 
 /** Incremental semantic-dedup admission: within-batch SemDeDup, then
@@ -131,24 +129,5 @@ class StreamingSemanticDedupSpec extends SparkSuite {
       .select("id_new").distinct().as[Long].collect().toSet
     assert(twinDrops == droppedByAdmission,
       s"q106's operator must reproduce the admission decision: $twinDrops vs $droppedByAdmission")
-  }
-
-  test("legacy flat pre-cent_sim stores migrate in place: batch layout + one-time backfill") {
-    val store = Files.createTempDirectory("graft_sem_migrate").toString + "/store"
-    // simulate a store written by the retired flat-upsert layout AND the
-    // previous schema (no cent_sim)
-    emb(1L -> Seq(1.0f, 0.01f, 0f, 0f))
-      .withColumn("centroid_id", lit(10L))
-      .select("vec_id", "centroid_id", "embedding")
-      .write.parquet(store)
-    // a twin of the stored vector must be dropped (history comparison
-    // works on the migrated store), and the store gains cent_sim
-    val out = StreamingSemanticDedup.admitBatch(
-      spark, emb(2L -> Seq(1.0f, 0.01f, 0f, 0f)), cents, store,
-      batchId = 0L, threshold = 0.999)
-    assert(out.count() == 0L)
-    val migrated = spark.read.parquet(store)
-    assert(migrated.columns.contains("cent_sim"))
-    assert(migrated.count() == 1L)
   }
 }
