@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFunctions
 
@@ -1133,28 +1137,134 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** Pair lists of at most this many rows are labeled on the driver by
+    * [[connectedComponents]]: 1M edges touch at most 2M nodes, half of
+    * [[MaxBroadcastLabelRows]], so the collected pairs and the label table
+    * they yield both stay driver-safe.
+    */
+  private[graft] val MaxLocalComponentEdges = 1000000
+
+  /** ~4M (node, component) rows ≈ 64 MB — a driver-safe broadcast. */
+  private[graft] val MaxBroadcastLabelRows = 4000000L
+
   /** Connected components over a near-duplicate pair graph (id_a, id_b) —
     * the step that turns pairwise matches into dedup CLUSTERS so one
-    * survivor per cluster can be kept. Distributed hash-min label
-    * propagation: every node starts labeled with itself; each round, every
-    * node adopts the minimum label in its closed neighborhood; converged
-    * when no label changes. Rounds = graph diameter (near-dup clusters are
-    * tiny and dense, so 2-4 rounds in practice); each round is one shuffle
-    * keyed by node — never materializes the transitive closure. The driver
-    * loop carries only a changed-count, and `Stage.snapshot` truncates the
-    * per-iteration lineage (without it the plan doubles every round).
+    * survivor per cluster can be kept. Returns (node, component) with
+    * component = min node id in the cluster; isolated nodes absent from
+    * `pairs` are not returned, and a null endpoint is a node of its own,
+    * labeled null, that connects nothing.
     *
-    * Returns (node, component) with component = min node id in the cluster;
-    * isolated nodes absent from `pairs` are not returned.
+    * Two paths behind one SIZE GATE on the pair list, both reaching the
+    * same fixpoint (DedupSpec runs both over seeded random graphs):
+    *  - at most `maxLocalEdges` pair rows: the driver collects them and
+    *    labels them by union-find ([[localComponents]]). The workloads
+    *    are bound by job dispatch, not data: q176 at sf0.01 labels a few
+    *    hundred edges, and the loop below spent 36 Spark jobs per
+    *    execution on them (3 rounds; its 7 eager snapshots fan out under
+    *    AQE into 24 more query-stage jobs) where this path needs 12.
+    *  - above the gate, distributed hash-min label propagation: every node
+    *    starts labeled with itself; each round, every node adopts the
+    *    minimum label in its closed neighborhood; converged when no label
+    *    changes. Each round is one shuffle keyed by node — never the
+    *    transitive closure — and `Stage.snapshot` truncates the
+    *    per-iteration lineage (without it the plan doubles every round).
+    *
+    * The gate is never silent: every call observes `graft.ccGate.<n>` on
+    * its one bounded read of the pairs — `edges` (pair rows read, capped
+    * at `maxLocalEdges + 1`) and `local` / `distributed` (1 on the path
+    * taken) — which [[graft.tools.CapMetricsListener]] totals per session.
+    * Tests force the loop with `maxLocalEdges = -1` (even an empty input
+    * then takes it) and the driver path with a large gate.
     */
   def connectedComponents(
-      pairs: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50): DataFrame = {
+      pairs: DataFrame, aCol: String, bCol: String, maxRounds: Int = 50,
+      maxLocalEdges: Int = MaxLocalComponentEdges): DataFrame = {
     // Checkpoint the PAIR INPUT before the symmetrizing union: both union
     // branches reference `pairs`, and Catalyst re-executes the full candidate
     // pipeline (shingle → invert → pair-expand, the expensive part of every
     // dedup job) once per branch. Materializing the tiny pair list first makes
     // the union read 2× a checkpoint instead of running 2× the pipeline.
     val p = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).transform(Stage.snapshotDF)
+    localComponents(p, maxLocalEdges).getOrElse(distributedComponents(p, maxRounds))
+  }
+
+  /** The driver path of [[connectedComponents]] over the pair snapshot
+    * `p` (src, dst): ONE bounded read of at most `maxEdges + 1` rows, so
+    * its row count decides the gate exactly in both checkpoint modes (the
+    * snapshot is already materialized; an observe on the snapshot itself
+    * would count twice under `reliable`). At or below the gate the rows
+    * are labeled by union-find; None sends the caller to the loop — above
+    * the gate, or for an id type whose order is not reproduced here.
+    *
+    * Output ≡ the loop's, schema included: the node column is the loop's
+    * symmetrized union column (type and nullability), component the same
+    * type. Union-find over ids SORTED in Spark's order, with every union
+    * keeping the smaller root, leaves each set's root at its minimum id —
+    * the loop's fixpoint. Self-loops and duplicate or reversed edges are
+    * no-ops; a null endpoint, which the loop's equi-joins never match,
+    * becomes one (null, null) row and leaves its partner a node.
+    *
+    * Up to [[LocalRelationMaxRows]] labels the result is a LocalRelation
+    * (no job, and sized for AQE's broadcast choice); a larger label set
+    * is parallelized behind a `Stage.snapshot` instead, because Catalyst
+    * folds filters and projections over a LocalRelation on the driver at
+    * every optimization of every consumer plan.
+    */
+  private def localComponents(p: DataFrame, maxEdges: Int): Option[DataFrame] = {
+    val node = p.union(p.select(col("dst"), col("src"))).schema("src")
+    // Spark's order for each supported id type; strings compare as UTF-8
+    // bytes (code points), not as Java's UTF-16 units
+    val order: Option[Ordering[Any]] =
+      if (p.schema("src").dataType != p.schema("dst").dataType) None
+      else node.dataType match {
+        case LongType | IntegerType | ShortType | ByteType =>
+          Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+        case StringType =>
+          Some(Ordering.by[Any, UTF8String](v => UTF8String.fromString(v.asInstanceOf[String])))
+        case _ => None
+      }
+    val cap = math.max(maxEdges, 0).min(Int.MaxValue - 1) + 1
+    val n = count(lit(1))
+    val local = lit(order.isDefined) && n <= maxEdges
+    val rows = p.observe(s"graft.ccGate.${capObsId.incrementAndGet()}",
+        least(n, lit(cap.toLong)).as("edges"),
+        local.cast("long").as("local"), (!local).cast("long").as("distributed"))
+      .limit(cap).collect()
+    order.filter(_ => rows.length <= maxEdges).map { ord =>
+      val ids = rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+        .filter(_ != null).toArray.distinct.sorted(ord)
+      val index = ids.iterator.zipWithIndex.toMap
+      val parent = Array.range(0, ids.length)
+      def root(i: Int): Int = {
+        var r = i
+        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+        r
+      }
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val (a, b) = (root(index(r.get(0))), root(index(r.get(1))))
+          if (a < b) parent(b) = a else parent(a) = b
+        }
+      }
+      val labels = ids.indices.map(i => Row(ids(i), ids(root(i)))) ++
+        (if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) Seq(Row(null, null)) else Nil)
+      val schema = StructType(Seq(node.copy(name = "node"),
+        StructField("component", node.dataType, node.nullable)))
+      val spark = p.sparkSession
+      if (labels.size <= LocalRelationMaxRows) spark.createDataFrame(labels.asJava, schema)
+      else Stage.snapshotDF(spark.createDataFrame(
+        spark.sparkContext.parallelize(labels, spark.sparkContext.defaultParallelism), schema))
+    }
+  }
+
+  /** Label sets up to this size leave [[localComponents]] as a plan-embedded
+    * LocalRelation; larger ones are materialized behind a snapshot. */
+  private val LocalRelationMaxRows = 100000
+
+  /** The distributed hash-min loop of [[connectedComponents]] over the pair
+    * snapshot `p` (src, dst).
+    */
+  private def distributedComponents(p: DataFrame, maxRounds: Int): DataFrame = {
     val edges = p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -1191,10 +1301,10 @@ object Dedup {
       // label table — every label value is itself a labeled node, so the
       // lookup always hits), so the remaining path length halves per
       // round (O(log d) total) instead of shrinking by one hop. Plain
-      // hash-min needs diameter rounds — the r18 profiler caught q176's
-      // linkage chains paying ~35 dispatch-bound rounds — but the
-      // near-dup cluster graphs (q80 family) are dense, converge in ≤ 3
-      // rounds, and would only pay the extra join, hence the gate: the
+      // hash-min needs diameter rounds on a chain, but the near-dup
+      // cluster graphs (q80 family, and q176's linkage clusters) are
+      // dense, converge in ≤ 3 rounds, and would only pay the extra
+      // join, hence the gate: the
       // first 3 rounds run the plain step; any graph still unconverged
       // by then has chains, exactly where the jump pays. Both candidate
       // values are ids of nodes in v's own component and labels only

@@ -116,12 +116,9 @@ object DedupQueries {
     */
   def q176_golden_record: Q = (s, dir) => goldenRecord(s, dir)
 
-  /** ~4M (node, component) rows ≈ 64 MB — a driver-safe broadcast. */
-  private[graft] val MaxBroadcastLabelRows = 4000000L
-
   private[graft] def goldenRecord(
       s: SparkSession, dir: String,
-      maxBroadcastLabelRows: Long = MaxBroadcastLabelRows): DataFrame = {
+      maxBroadcastLabelRows: Long = Dedup.MaxBroadcastLabelRows): DataFrame = {
     import graft.operators.Linkage
     val c = Tables.customer(s, dir)
       .select("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")

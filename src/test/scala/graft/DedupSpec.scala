@@ -29,7 +29,7 @@ class DedupSpec extends SparkSuite {
     // compression can; converging here is the witness that the jump fires
     val chain = (1L to 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val got = graft.operators.Dedup
-      .connectedComponents(chain, "id_a", "id_b", maxRounds = 12)
+      .connectedComponents(chain, "id_a", "id_b", maxRounds = 12, maxLocalEdges = -1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 31 && got.values.forall(_ == 1L), s"$got")
   }
@@ -42,9 +42,62 @@ class DedupSpec extends SparkSuite {
     // neighborhood in a later round THROUGH the frontier (11 changed), or
     // the restricted join would freeze 12 at label 2 and split the chain
     val edges = Seq((2L, 12L), (11L, 12L), (10L, 11L), (1L, 10L)).toDF("id_a", "id_b")
-    val got = graft.operators.Dedup.connectedComponents(edges, "id_a", "id_b")
+    val got = graft.operators.Dedup.connectedComponents(edges, "id_a", "id_b", maxLocalEdges = -1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 5 && got.values.forall(_ == 1L), s"$got")
+  }
+
+  test("connectedComponents: the driver union-find and the distributed loop agree on rows and schema; the gate reports its path") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    // seeded random graphs plus the shapes the gate must not change:
+    // chains (multi-round), stars, self-loops, duplicate and reversed edges
+    def random(n: Int, m: Int) = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val chain = (1L to 20L).map(i => (i + 100, i + 101))
+    val star = (1L to 15L).map(i => (500L, 500L + i)) ++ (1L to 15L).map(i => (600L + i, 600L))
+    val quirks = Seq((7L, 7L), (3L, 4L), (3L, 4L), (4L, 3L), (9L, 9L), (9L, 10L))
+    val graphs = Seq(random(40, 30), random(200, 150), random(12, 40), chain, star,
+      chain ++ star ++ quirks, quirks, Seq.empty[(Long, Long)])
+    val listener = graft.tools.CapMetricsListener.register(spark)
+    def both(pairs: org.apache.spark.sql.DataFrame): Unit = {
+      val viaLocal = Dedup.connectedComponents(pairs, "id_a", "id_b", maxLocalEdges = 10000)
+      val viaLoop = Dedup.connectedComponents(pairs, "id_a", "id_b", maxLocalEdges = -1)
+      assert(viaLocal.schema == viaLoop.schema)
+      val (l, d) = (viaLocal.collect().map(_.toSeq).toSet, viaLoop.collect().map(_.toSeq).toSet)
+      assert(l == d, s"local ${l -- d} vs loop ${d -- l}")
+    }
+    try {
+      graphs.foreach { g =>
+        val longs = g.toDF("id_a", "id_b")
+        both(longs)
+        both(longs.select($"id_a".cast("int"), $"id_b".cast("int")))
+        both(longs.select($"id_a".cast("string"), $"id_b".cast("string")))
+      }
+      // a null endpoint joins nothing in the loop: one (null, null) row
+      // and its partner labeled alone (or by its other edges)
+      both(Seq[(Option[Long], Option[Long])]((Some(1L), None), (None, Some(2L)),
+        (None, None), (Some(2L), Some(3L))).toDF("id_a", "id_b"))
+      both(Seq[(String, String)](("b", null), ("\uffff", "\ud83d\ude00"), ("a", "b"))
+        .toDF("id_a", "id_b"))
+      // code-point order: U+1F600 sorts after U+FFFF in Spark, before it in Java
+      val cp = Dedup.connectedComponents(Seq(("\uffff", "\ud83d\ude00")).toDF("id_a", "id_b"),
+        "id_a", "id_b").as[(String, String)].collect().toMap
+      assert(cp.values.toSet == Set("\uffff"), s"$cp")
+      // mixed id types fall back to the loop (the local path needs one order)
+      both(Seq((1, 2L), (2, 3L)).toDF("id_a", "id_b"))
+
+      // the gate is never silent: edges read and the path taken, per call
+      listener.reset()
+      val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+      Dedup.connectedComponents(pairs, "id_a", "id_b").collect()
+      Dedup.connectedComponents(pairs, "id_a", "id_b", maxLocalEdges = 2).collect()
+      val want = Map("graft.ccGate:edges" -> 6L, "graft.ccGate:local" -> 1L,
+        "graft.ccGate:distributed" -> 1L)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def gate = listener.snapshot.filter(_._1.startsWith("graft.ccGate"))
+      while (gate != want && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(gate == want, s"${listener.snapshot}")
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("connectedComponents: empty pair list converges via the null observe sum (r18 one-job-per-round loop)") {
@@ -53,7 +106,7 @@ class DedupSpec extends SparkSuite {
     // rows and returns null — the loop must read that as converged (0)
     // rather than NPE or spin to the round cap
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    val got = graft.operators.Dedup.connectedComponents(empty, "id_a", "id_b")
+    val got = graft.operators.Dedup.connectedComponents(empty, "id_a", "id_b", maxLocalEdges = -1)
     assert(got.count() == 0L)
     assert(got.columns.toSeq == Seq("node", "component"))
   }

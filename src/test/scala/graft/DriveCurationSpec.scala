@@ -148,21 +148,36 @@ class DriveCurationSpec extends SparkSuite {
       val work = tempDir("empty")
       try {
         val conf = EsConf(stub.url, retryBackoffMs = 5)
-        val store = s"$work/store"; val card = s"$work/card"
-        val sink = DriveCuration.EsSink(conf, "curated")
-        // batch 0: one survivor; batch 1: gate failures only (zero
-        // survivors) — partial/store/sink handling must not throw and the
-        // card must not change
-        val (n0, f0) = DriveCuration.curateBatch(spark, df(Seq(allDocs(0))),
-          store, card, sink, tagger, 0L, s"$work/ckpt", minTokens = 10L, maxStopwordRatio = 0.5)
-        assert(n0 == 1L && f0 == 0L)
+        val in = s"$work/in"; val card = s"$work/card"; val ckpt = s"$work/ckpt"
+        def run(): Unit =
+          DriveCuration.start(graft.streaming.IngestJob.source(spark, in),
+            s"$work/store", card, DriveCuration.EsSink(conf, "curated"), ckpt,
+            tagger, minTokens = 10L, maxStopwordRatio = 0.5).awaitTermination()
+        def parts(): Set[String] =
+          new java.io.File(in).list().filter(_.endsWith(".parquet")).toSet
+        // the file names each batch of the query's source log read
+        def logged(): Seq[Set[String]] =
+          new java.io.File(s"$ckpt/sources/0").listFiles()
+            .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong).toSeq
+            .map(f => "\"path\":\"([^\"]+)\"".r
+              .findAllMatchIn(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+              .map(m => new org.apache.hadoop.fs.Path(m.group(1)).getName).toSet)
+        // first run: one survivor
+        df(Seq(allDocs(0))).write.parquet(in)
+        run()
+        val first = parts()
         val after0 = cardRows(DriveCuration.card(spark, card))
-        val (n1, f1) = DriveCuration.curateBatch(spark,
-          df(Seq(allDocs(5), allDocs(6))),
-          store, card, sink, tagger, 1L, s"$work/ckpt", minTokens = 10L, maxStopwordRatio = 0.5)
-        assert(n1 == 0L && f1 == 0L)
+        assert(stub.indices("curated")._2.keySet == Set("1"))
+        // catch-up run over one new file of gate failures only (zero
+        // survivors): partial/store/sink handling must not throw, the card
+        // must not change, and the run reads the new file alone
+        df(Seq(allDocs(5), allDocs(6))).write.mode("append").parquet(in)
+        val added = parts() -- first
+        run()
         assert(cardRows(DriveCuration.card(spark, card)) == after0)
         assert(stub.indices("curated")._2.keySet == Set("1"))
+        val batches = logged()
+        assert(batches.size == 2 && batches == Seq(first, added), s"source log: $batches")
       } finally rm(work)
     }
   }

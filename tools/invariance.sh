@@ -1,5 +1,6 @@
 #!/bin/bash
-# Invariance audit: results must not depend on parallelism, AQE or codegen.
+# Invariance audit: results must not depend on parallelism, AQE, codegen or
+# the snapshot mode.
 # Runs graft.Verify over <data_dir> once as the base (local[$SPARK_GRAFT_CPUS],
 # default 4) and once per axis, then diffs each axis dump against the base
 # with tools/digest_dump.py --diff. Exits non-zero if any run fails or any
@@ -9,7 +10,9 @@
 #
 # Axes: cpu3 (local[3], 3 shuffle partitions), aqeoff
 # (spark.sql.adaptive.enabled=false), nocodegen (whole-stage codegen off,
-# expression codegen off). Dumps and logs land in <out_root>/<axis>{,.log}.
+# expression codegen off), reliable (every Stage.snapshot a reliable
+# checkpoint under <out_root>/reliable-ckpt). Dumps and logs land in
+# <out_root>/<axis>{,.log}.
 # Runs are sequential: never two JVMs at once.
 set -euo pipefail
 if [ $# -ne 2 ]; then
@@ -39,9 +42,12 @@ run cpu3 3
 run aqeoff "$cpus" -Dspark.sql.adaptive.enabled=false
 run nocodegen "$cpus" -Dspark.sql.codegen.wholeStage=false \
   -Dspark.sql.codegen.factoryMode=NO_CODEGEN
+rm -rf "$out/reliable-ckpt"
+run reliable "$cpus" -Dspark.graft.checkpoint=reliable \
+  -Dspark.graft.checkpoint.dir="$out/reliable-ckpt"
 
 status=0
-for axis in cpu3 aqeoff nocodegen; do
+for axis in cpu3 aqeoff nocodegen reliable; do
   echo "--- base vs $axis:"
   python3 tools/digest_dump.py --diff "$out/base" "$out/$axis" || status=1
 done
