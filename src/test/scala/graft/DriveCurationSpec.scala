@@ -168,6 +168,7 @@ class DriveCurationSpec extends SparkSuite {
         val first = parts()
         val after0 = cardRows(DriveCuration.card(spark, card))
         assert(stub.indices("curated")._2.keySet == Set("1"))
+        assert(graft.streaming.EsUpsertSink.failedTotal(ckpt) == 0L)
         // catch-up run over one new file of gate failures only (zero
         // survivors): partial/store/sink handling must not throw, the card
         // must not change, and the run reads the new file alone
@@ -176,8 +177,16 @@ class DriveCurationSpec extends SparkSuite {
         run()
         assert(cardRows(DriveCuration.card(spark, card)) == after0)
         assert(stub.indices("curated")._2.keySet == Set("1"))
+        assert(graft.streaming.EsUpsertSink.failedTotal(ckpt) == 0L)
         val batches = logged()
         assert(batches.size == 2 && batches == Seq(first, added), s"source log: $batches")
+        // the same zero-survivor batch composed by hand reports no
+        // survivors and no failed docs
+        val (n, f) = DriveCuration.curateBatch(spark, df(Seq(allDocs(5), allDocs(6))),
+          s"$work/store", card, DriveCuration.EsSink(conf, "curated"), tagger, 2L, ckpt,
+          minTokens = 10L, maxStopwordRatio = 0.5)
+        assert(n == 0L && f == 0L)
+        assert(cardRows(DriveCuration.card(spark, card)) == after0)
       } finally rm(work)
     }
   }
