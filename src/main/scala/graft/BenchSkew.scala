@@ -92,9 +92,9 @@ object BenchSkew {
     // each entry: name -> () => result cardinality (forces full execution)
     val allOps: Seq[(String, () => Long)] = Seq(
       "minhash_capped" -> (() =>
-        Dedup.minhashCandidates(docs, "doc_id", "text").count()),
+        Dedup.minhashCandidates(Dedup.shingleIndex(docs, "doc_id", "text", 3)).count()),
       "minhash_open" -> (() =>
-        Dedup.minhashCandidates(docs, "doc_id", "text",
+        Dedup.minhashCandidates(Dedup.shingleIndex(docs, "doc_id", "text", 3),
           maxBucketSize = Int.MaxValue).count()),
       "jacc_between_capped" -> (() =>
         Dedup.jaccardBetween(shNew, shOld, 0.6, maxPostings = 50).count()),

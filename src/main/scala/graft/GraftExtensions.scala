@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CosineSim, DotProduct, JaroWinkler, MgHeavyHitters, PolyHash, SimHash64, TopKAgg, WordNgrams}
@@ -19,80 +18,50 @@ import graft.functions.{CosineSim, DotProduct, JaroWinkler, MgHeavyHitters, Poly
   * }}}
   */
 object GraftExtensions {
+
+  /** The one function table both registration paths read:
+    * (SQL name, usage, builder).
+    */
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("graft_cosine", "graft_cosine(a, b) - cosine similarity of two float/double arrays",
+      args => CosineSim(args(0), args(1))),
+    ("graft_dot", "graft_dot(a, b) - dot product of two float/double arrays",
+      args => DotProduct(args(0), args(1))),
+    ("graft_simhash64", "graft_simhash64(tokens) - 64-bit SimHash of a string array",
+      args => SimHash64(args.head)),
+    ("graft_jaro_winkler", "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings",
+      args => JaroWinkler(args(0), args(1))),
+    ("graft_topk",
+      "graft_topk(ord, payload, k) - top-k (ord, payload) pairs per group, partial-aggregated",
+      args => TopKAgg(args(0), args(1), args(2)).toAggregateExpression()),
+    ("graft_heavy_hitters",
+      "graft_heavy_hitters(item, k) - Misra-Gries candidate summary, partial-aggregated",
+      args => MgHeavyHitters(args(0), args(1)).toAggregateExpression()),
+    ("graft_shingles", "graft_shingles(text, k) - distinct word k-shingles, single pass",
+      args => WordNgrams(args(0), args(1), distinct = true)),
+    ("graft_ngrams", "graft_ngrams(text, k) - word n-grams with duplicates, single pass",
+      args => WordNgrams(args(0), args(1), distinct = false)),
+    ("graft_polyhash", "graft_polyhash(s) - polynomial codepoint hash mod 1e9+7",
+      args => PolyHash(args.head)))
+
   /** Register the same functions on an ALREADY-RUNNING session (extensions
     * only apply at session build time).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "graft_cosine", args => CosineSim(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_dot", args => DotProduct(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_simhash64", args => SimHash64(args.head), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", args => JaroWinkler(args(0), args(1)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_topk",
-      args => TopKAgg(args(0), args(1), args(2)).toAggregateExpression(), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_heavy_hitters",
-      args => MgHeavyHitters(args(0), args(1)).toAggregateExpression(), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_shingles", args => WordNgrams(args(0), args(1), distinct = true), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_ngrams", args => WordNgrams(args(0), args(1), distinct = false), "built-in")
-    registry.createOrReplaceTempFunction(
-      "graft_polyhash", args => PolyHash(args.head), "built-in")
+    functions.foreach { case (name, _, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      info("graft_cosine", "graft_cosine(a, b) - cosine similarity of two float/double arrays"),
-      (args: Seq[Expression]) => CosineSim(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      info("graft_dot", "graft_dot(a, b) - dot product of two float/double arrays"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      info("graft_simhash64", "graft_simhash64(tokens) - 64-bit SimHash of a string array"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      info("graft_jaro_winkler", "graft_jaro_winkler(a, b) - Jaro-Winkler similarity of two strings"),
-      (args: Seq[Expression]) => JaroWinkler(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_topk"),
-      info("graft_topk",
-        "graft_topk(ord, payload, k) - top-k (ord, payload) pairs per group, partial-aggregated"),
-      (args: Seq[Expression]) => TopKAgg(args(0), args(1), args(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_heavy_hitters"),
-      info("graft_heavy_hitters",
-        "graft_heavy_hitters(item, k) - Misra-Gries candidate summary, partial-aggregated"),
-      (args: Seq[Expression]) => MgHeavyHitters(args(0), args(1)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      info("graft_shingles", "graft_shingles(text, k) - distinct word k-shingles, single pass"),
-      (args: Seq[Expression]) => WordNgrams(args(0), args(1), distinct = true)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ngrams"),
-      info("graft_ngrams", "graft_ngrams(text, k) - word n-grams with duplicates, single pass"),
-      (args: Seq[Expression]) => WordNgrams(args(0), args(1), distinct = false)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_polyhash"),
-      info("graft_polyhash", "graft_polyhash(s) - polynomial codepoint hash mod 1e9+7"),
-      (args: Seq[Expression]) => PolyHash(args.head)))
-    // opt-in anti-join bloom reroute (inert unless
-    // spark.graft.bloomAntiJoin.enabled=true; see BloomAntiJoinRule)
-    ext.injectOptimizerRule(_ => graft.plans.BloomAntiJoinRule)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        builder))
+    }
 }

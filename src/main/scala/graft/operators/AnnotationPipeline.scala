@@ -85,7 +85,7 @@ object AnnotationPipeline {
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val numBits = graft.functions.BloomSizing.optimalNumBits(expectedItems, fpp)
+    val numBits = optimalNumBits(expectedItems, fpp)
     val processedIds = sink.select(col(sinkDocIdCol).as("__processed_id")).distinct()
     val bfAgg = new BloomFilterAggregate(
       new XxHash64(Seq(GraftBridge.expression(col("__processed_id")))),
@@ -102,6 +102,17 @@ object AnnotationPipeline {
     val maybe = docs.filter(mightContain)
       .join(processedIds, docs(docIdCol) === col("__processed_id"), "left_anti")
     fresh.unionByName(maybe)
+  }
+
+  /** Optimal bloom bit count for `expectedItems` at false-positive rate
+    * `fpp`: ceil(−n·ln p / ln²2), floored at 64 so degenerate inputs
+    * still build a valid sketch.
+    */
+  private def optimalNumBits(expectedItems: Long, fpp: Double): Long = {
+    require(expectedItems > 0, s"expectedItems must be positive: $expectedItems")
+    require(fpp > 0 && fpp < 1, s"fpp must be in (0, 1): $fpp")
+    math.max(64L,
+      math.ceil(-expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong)
   }
 
   /** U1 (mock) — deterministic dictionary tagger. For every term in `terms`
@@ -210,14 +221,12 @@ object AnnotationPipeline {
 
   /** D1 — canonical-JSON distinct key (reference `remove_duplicate_records`,
     * `ingester/utils.py:16-19`: `json.dumps(d, sort_keys=True)` → set).
-    * For struct columns, field order is fixed by the schema, so `to_json` is
-    * already canonical; map-typed fields are the one place key order can
-    * differ — they are re-keyed through sorted `map_entries` first. Used as
-    * a dropDuplicates key, it reproduces the reference's whole-record dedup
-    * without its order destruction.
+    * For struct columns, field order is fixed by the schema, so plain
+    * `to_json` is already canonical; map-typed fields are the one place key
+    * order can differ, so this re-keys a map through sorted `map_entries`
+    * first. Used as a dropDuplicates key, it reproduces the reference's
+    * whole-record dedup without its order destruction.
     */
-  def canonicalJson(c: Column): Column = to_json(c)
-
   def canonicalMapJson(m: Column): Column =
     to_json(map_from_entries(array_sort(map_entries(m))))
 

@@ -27,7 +27,7 @@ object Corpus {
 
   /** Exploded (doc, token) rows with the document length riding along —
     * explode_outer to dodge the InferFiltersFromGenerate double-evaluation
-    * (see Dedup.minhashSignatures).
+    * (see Dedup.shingleIndex).
     */
   // No spread() here: tokenization is one cheap pass and every consumer
   // aggregates immediately after (the groupBy exchange restores parallelism);
@@ -467,7 +467,7 @@ object Corpus {
       // explode_outer: sequence(0, lastIdx>=0) is never empty, so the outer
       // form changes nothing — but plain explode would trigger
       // InferFiltersFromGenerate, duplicating the tokenize pipeline into a
-      // pre-Generate size() filter (see minhashSignatures)
+      // pre-Generate size() filter (see Dedup.shingleIndex)
       .select(col("doc_id"), col("tk"),
         explode_outer(sequence(lit(0L), lastIdx)).as("chunk_id"))
       .select(col("doc_id"), col("chunk_id"),

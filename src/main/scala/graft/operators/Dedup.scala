@@ -2,7 +2,7 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -66,93 +66,90 @@ object Dedup {
       "left_semi")
   }
 
-  /** Word-shingle MinHash signatures for a whole corpus: `numHashes`
-    * permutations approximated by seeded xxhash64 of the shingle text;
-    * signature element i = min over shingles of xxhash64(i, shingle).
+  /** The exploded shingle inverted-index relation shared by
+    * [[minhashCandidates]] and the whole exact Jaccard family: one row per
+    * (document, distinct k-shingle) with the set size riding along
+    * (computed in the same projection that explodes the set — no join
+    * back against a per-doc size table later). Returns (`__id`, `sz`,
+    * `shingle`). Callers that fan the relation out to multiple consumers
+    * checkpoint it (q82/q89 share ONE checkpointed index between
+    * candidate generation and verification).
     *
-    * Computed as explode(shingles) → one hash-aggregate with `numHashes`
-    * min() columns: the shingle set is materialized ONCE per document and
-    * each hash is one partial-aggregated min — a single map-side-combining
-    * pass. (The tempting nested-lambda form `transform(seeds, i =>
-    * array_min(transform(shingles, ...)))` re-evaluates the shingle pipeline
-    * per seed after Catalyst collapses projections — 64× the work; measured
-    * 45× slower at sf0.1.)
+    * `explode_outer`, not `explode`: InferFiltersFromGenerate would
+    * otherwise add `size(shingles(text)) > 0` below the Generate, inlining
+    * the whole shingle pipeline into a per-row Filter — every document
+    * would shingle TWICE (measured ~2.5× slower on q42). The outer variant
+    * infers nothing; the null rows it emits for empty sets are dropped by
+    * a cheap attribute-only filter after the Generate.
     *
-    * Returns (`__id`, `sig: array<bigint>`).
+    * Per-document work over the shingle set runs on THIS relation as one
+    * partial-aggregated pass, never as a nested lambda over the set: the
+    * tempting MinHash form `transform(seeds, i => array_min(transform(
+    * shingles, ...)))` re-evaluated the shingle pipeline per seed once
+    * Catalyst collapsed the projections — 64× the work, measured 45×
+    * slower at sf0.1 (the 45× incident). A plan that references this
+    * relation twice without a snapshot pays the same way: Catalyst runs
+    * the tokenize+shingle lineage once per reference.
     */
-  def minhashSignatures(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int,
-      numHashes: Int): DataFrame = {
-    // explode_outer, not explode: InferFiltersFromGenerate would otherwise
-    // add `size(shingles(text)) > 0` below the Generate, inlining the whole
-    // shingle pipeline into a per-row Filter — every document would shingle
-    // TWICE (measured ~2.5× slower on q42). The outer variant infers nothing;
-    // the null rows it emits for empty sets are dropped by a cheap
-    // attribute-only filter after the Generate.
-    // Hash each shingle STRING once (O(len) work), then derive the numHashes
-    // "permutations" by re-mixing that 8-byte value with the seed index —
-    // xxhash64 over (int, long) instead of (int, string). The string is the
-    // expensive input (tens of bytes); re-hashing it per seed made the
-    // signature aggregate do numHashes× the byte-crunching for no extra
-    // independence (seeded re-mix of a 64-bit hash is the standard MinHash
-    // family construction).
-    val sh = spread(docs)
+  def shingleIndex(docs: DataFrame, idCol: String, textCol: String, shingleK: Int): DataFrame =
+    spread(docs)
       .select(col(idCol).as("__id"), TextFunctions.shingles(col(textCol), shingleK).as("shs"))
-      .select(col("__id"), explode_outer(col("shs")).as("s"))
-      .filter(col("s").isNotNull)
-      .select(col("__id"), xxhash64(col("s")).as("h0"))
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("h0"))).as(s"h$i"))
-    sh.groupBy("__id")
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("__id"), array((0 until numHashes).map(i => col(s"h$i")): _*).as("sig"))
-  }
+      .select(col("__id"), size(col("shs")).as("sz"), explode_outer(col("shs")).as("shingle"))
+      .filter(col("shingle").isNotNull)
 
-  /** MinHash-LSH candidate pairs: band the signature (`bands` bands of
-    * `rows = numHashes/bands` values), bucket-join on (band, band-hash),
-    * emit distinct candidate pairs (idA < idB).
+  /** MinHash-LSH candidate pairs (`id_a` < `id_b`) over a [[shingleIndex]]
+    * relation, hashed in SQL-expressible arithmetic end to end so the
+    * oracle replays every step: shingle hash h = polynomial codepoint
+    * fold (`PolyHash` native kernel ≡ the oracle's `list_reduce`),
+    * permutation i approximated by (a_i·h + b_i) mod P with a_i = 2i+1,
+    * b_i = 7i+3, signature element i = min over shingles (one hash
+    * aggregate with `numHashes` min columns). `bands` bands of
+    * `numHashes/bands` values, keyed by value concatenation, generate the
+    * candidates through [[bandBucketPairs]]. The shuffle key is the band
+    * key — two documents meet only if some band matches — and buckets
+    * larger than `maxBucketSize` are dropped before the pair stage: a
+    * bucket that big is non-discriminative and would go quadratic, the
+    * standard skew guard for LSH at scale. Near-dup pairs still meet in
+    * their other, selective bands.
     *
-    * The shuffle key is the band hash — two documents meet only if some band
-    * matches, so the join fan-out is bounded by bucket sizes, not corpus
-    * size. Buckets larger than `maxBucketSize` are dropped before the
-    * self-join: a bucket that big is non-discriminative (its band carries no
-    * signal) and would go quadratic — the standard skew guard for LSH at
-    * scale. Near-dup pairs still meet in their other, selective bands.
-    * This is the 100 TB-safe shape: no all-pairs comparison anywhere.
+    * `finalized = true` scrambles h ONCE through the [[Kmv.finalized]]
+    * affine finalizer before the `numHashes` variants (the declared q43
+    * form; q84/q89/q111/q82/q96 declare the raw form). The raw base-31
+    * polyhash is near-monotone on lexicographic content, so each affine
+    * permutation's min is biased toward lexicographically-small shingles
+    * — correlated signature elements, not independent permutation draws.
+    * The finalizer decorrelates the family at the cost of one
+    * multiply-add, still one `list_reduce` + one multiply-add away from
+    * the oracle replay (the same reason it is load-bearing in
+    * `fingerprintFinalized`).
     */
   def minhashCandidates(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 8,
+      shingles: DataFrame,
+      finalized: Boolean = false,
+      numHashes: Int = 8,
+      bands: Int = 4,
       maxBucketSize: Int = 200): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val rows = numHashes / bands
-    val sig = minhashSignatures(docs, idCol, textCol, shingleK, numHashes)
-    // explode_outer: the banding transform would otherwise be duplicated into
-    // an inferred non-empty Filter (see minhashSignatures); its size is the
-    // constant `bands` so the inference is pure waste.
+    val p = graft.functions.StringKernels.PolyHashMod
+    val poly = graft.functions.StringFunctions.polyHash(col("shingle"))
+    val hashed = shingles.withColumn("h", if (finalized) Kmv.finalized(poly) else poly)
+    val aggs = (0 until numHashes).map(i =>
+      min((col("h") * (2 * i + 1) + (7 * i + 3)) % p).as(s"sig$i"))
+    val sig = hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
     val banded = sig.select(
       col("__id"),
-      explode_outer(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), xxhash64(slice(col("sig"), b * rows + 1, lit(rows))).as("bucket"))
-      )).as("bb"))
+      explode_outer(array((0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          concat_ws(":", (0 until rows).map(r => col(s"sig${b * rows + r}")): _*).as("bucket"))
+      }: _*)).as("bb"))
       .select(col("__id"), col("bb.band"), col("bb.bucket"))
-    // One aggregation instead of a self-join: collect each bucket's members
-    // and emit its pairs in-place. The signature pipeline runs ONCE (a
-    // self-join would re-execute the whole lineage for each side), and the
-    // size cap is a filter on the collected array.
     bandBucketPairs(banded, maxBucketSize)
   }
 
-  /** Shared capped pair-expansion tail of both banded candidate
-    * generators: count each (band, bucket), drop over-cap buckets, emit
-    * pairs by a bucket-keyed self-join. The firing cap is VISIBLE
+  /** The capped pair-expansion tail of [[minhashCandidates]]: count each
+    * (band, bucket), drop over-cap buckets, emit pairs by a bucket-keyed
+    * self-join. The firing cap is VISIBLE
     * (no-silent-caps): `graft.lshBandCap.*` reports memberships in
     * over-cap buckets and the bucket count — CollectMetrics piggybacks on
     * the size aggregation the cap needs anyway, zero extra jobs.
@@ -203,117 +200,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
       .distinct()
   }
-
-  /** MinHash-LSH candidate pairs with FULLY SQL-expressible hashing, so the
-    * whole pipeline is oracle-checkable (xxhash64 variants above are
-    * rows-only): shingle hash = polynomial codepoint fold (`PolyHash`
-    * native kernel ≡ the oracle's list_reduce), permutation i approximated
-    * by h_i = (a_i·h + b_i) mod P with a_i = 2i+1, b_i = 7i+3, signature
-    * element i = min over shingles. Bands of `rowsPerBand` signature values
-    * (key = concatenated values, SQL-expressible) generate candidates with
-    * the same capped-bucket in-place pair expansion as minhashCandidates.
-    */
-  def minhashCandidatesDeterministic(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      numHashes: Int = 8,
-      bands: Int = 4,
-      maxBucketSize: Int = 200): DataFrame =
-    minhashCandidatesDeterministicFrom(
-      shingleIndex(docs, idCol, textCol, shingleK), numHashes, bands, maxBucketSize)
-
-  /** [[minhashCandidatesDeterministic]] over a prebuilt [[shingleIndex]]
-    * relation, so pipelines composing candidate generation with exact
-    * verification (q82/q89) shingle the corpus once and share one
-    * checkpoint between the stages.
-    */
-  def minhashCandidatesDeterministicFrom(
-      shingles: DataFrame,
-      numHashes: Int = 8,
-      bands: Int = 4,
-      maxBucketSize: Int = 200): DataFrame =
-    affineMinhashPairs(
-      shingles.withColumn("h",
-        graft.functions.StringFunctions.polyHash(col("shingle"))),
-      numHashes, bands, maxBucketSize)
-
-  /** MinHash-LSH candidate pairs on the FINALIZED polynomial hash — the
-    * declared q43 gate form (the q53/q228-beside-q71 convention: the
-    * xxhash64 production form [[minhashCandidates]] stays spec-tested;
-    * THIS form is SQL-replayable end to end). The [[Kmv.finalized]]
-    * affine finalizer is load-bearing here for the same reason it is in
-    * `fingerprintFinalized`: the raw base-31 polyhash is near-monotone on
-    * lexicographic content, so each affine permutation's min is biased
-    * toward lexicographically-small shingles — correlated signature
-    * elements, not independent permutation draws. Scrambling the hash
-    * ONCE before the `numHashes` affine variants decorrelates the family
-    * at the cost of one multiply-add, still one `list_reduce` + one
-    * multiply-add away from the oracle replay.
-    */
-  def minhashCandidatesFinalized(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleK: Int = 3,
-      numHashes: Int = 8,
-      bands: Int = 4,
-      maxBucketSize: Int = 200): DataFrame =
-    affineMinhashPairs(
-      shingleIndex(docs, idCol, textCol, shingleK).withColumn("h",
-        Kmv.finalized(graft.functions.StringFunctions.polyHash(col("shingle")))),
-      numHashes, bands, maxBucketSize)
-
-  /** Shared tail of the SQL-replayable MinHash candidate generators:
-    * signature element i = min over shingles of (a_i·h + b_i) mod P with
-    * a_i = 2i+1, b_i = 7i+3 over a prepared (`__id`, `h`) relation, bands
-    * of `numHashes/bands` values keyed by value concatenation, then the
-    * same capped-bucket in-place pair expansion as the xxhash64 form.
-    */
-  private def affineMinhashPairs(
-      hashed: DataFrame,
-      numHashes: Int,
-      bands: Int,
-      maxBucketSize: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rows = numHashes / bands
-    val p = graft.functions.StringKernels.PolyHashMod
-    val aggs = (0 until numHashes).map(i =>
-      min((col("h") * (2 * i + 1) + (7 * i + 3)) % p).as(s"sig$i"))
-    val sig = hashed.groupBy("__id").agg(aggs.head, aggs.tail: _*)
-    val banded = sig.select(
-      col("__id"),
-      explode_outer(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat_ws(":", (0 until rows).map(r => col(s"sig${b * rows + r}")): _*).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("__id"), col("bb.band"), col("bb.bucket"))
-    bandBucketPairs(banded, maxBucketSize)
-  }
-
-  /** All ordered pairs of a sorted array column (element_i < element_j),
-    * as array<struct<`aName`, `bName`>> — pair generation without a
-    * self-join. Shared by every bucket-based candidate generator.
-    */
-  private def pairsAs(sorted: Column, aName: String, bName: String): Column =
-    flatten(transform(sorted, (x, i) =>
-      transform(slice(sorted, i + lit(2), size(sorted)),
-        y => struct(x.as(aName), y.as(bName)))))
-
-  /** The exploded shingle inverted-index relation shared by the whole exact
-    * Jaccard family: one row per (document, distinct k-shingle) with the
-    * set size riding along (computed in the same projection that explodes
-    * the set — no join back against a per-doc size table later). Returns
-    * (`__id`, `sz`, `shingle`). Callers that fan the relation out to
-    * multiple consumers checkpoint it (q82/q89 share ONE checkpointed index
-    * between candidate generation and verification).
-    */
-  def shingleIndex(docs: DataFrame, idCol: String, textCol: String, shingleK: Int): DataFrame =
-    spread(docs)
-      .select(col(idCol).as("__id"), TextFunctions.shingles(col(textCol), shingleK).as("shs"))
-      .select(col("__id"), size(col("shs")).as("sz"), explode_outer(col("shs")).as("shingle"))
-      .filter(col("shingle").isNotNull)
 
   /** Shared scoring tail: (id_a, id_b, c, sz_a, sz_b) → thresholded,
     * rounded (id_a, id_b, jaccard). One definition so the exact family's
@@ -408,8 +294,8 @@ object Dedup {
     * documents an O(n²) expansion (now streamed through the join's
     * bounded group buffer rather than one object sort, but still n²
     * instances). At corpus scale use [[jaccardPairsPrefix]] (exactness-
-    * preserving pruning) or [[minhashCandidatesDeterministic]] →
-    * [[jaccardVerify]] (probabilistic recall); q90 and q82/q89 exercise
+    * preserving pruning) or [[minhashCandidates]] → [[jaccardVerify]]
+    * (probabilistic recall); q90 and q82/q89 exercise
     * those compositions.
     */
   def jaccardPairs(
@@ -419,8 +305,8 @@ object Dedup {
       shingleK: Int = 3,
       threshold: Double = 0.6): DataFrame = {
     // one shingling pass fans out to both join sides: snapshot, or the
-    // self-join compiles the tokenize+shingle subtree twice (the 45×
-    // minhashSignatures incident)
+    // self-join compiles the tokenize+shingle subtree twice (see
+    // shingleIndex, the 45× incident)
     val sh = shingleIndex(docs, idCol, textCol, shingleK).transform(Stage.snapshotDF)
     val a = sh.select(col("shingle"), col("__id").as("id_a"), col("sz").as("sz_a"))
     val b = sh.select(col("shingle"), col("__id").as("id_b"), col("sz").as("sz_b"))
@@ -446,8 +332,8 @@ object Dedup {
     * the ones dropped from the index; a length filter
     * (min ≥ t·max) prunes further before verification computes exact
     * Jaccard on candidates only. Exactness-preserving, unlike the
-    * LSH-candidate route ([[minhashCandidatesDeterministic]] →
-    * [[jaccardVerify]]) whose recall at the threshold is probabilistic.
+    * LSH-candidate route ([[minhashCandidates]] → [[jaccardVerify]])
+    * whose recall at the threshold is probabilistic.
     */
   def jaccardPairsPrefix(
       docs: DataFrame,
@@ -634,8 +520,8 @@ object Dedup {
     * pairs, by fanning each candidate over doc a's rows in the flat shingle
     * index and counting the rows doc b shares — linear in corpus size +
     * candidate count, narrow shuffles keyed by shingle or doc id, no
-    * quadratic stage anywhere. With the deterministic generator
-    * ([[minhashCandidatesDeterministic]]) the whole composition stays
+    * quadratic stage anywhere. With the polyhash generator
+    * ([[minhashCandidates]]) the whole composition stays
     * SQL-expressible, so candidates→verify is oracle-checked end-to-end.
     *
     * This overload takes a prebuilt [[shingleIndex]] relation so callers
@@ -1027,62 +913,9 @@ object Dedup {
     pairs.filter(hit).select("id_new").distinct()
   }
 
-  /** SimHash: 64-bit locality-sensitive fingerprint. Each token contributes
-    * its xxhash64 bit pattern (+1 for set bits, −1 for unset); the
-    * fingerprint takes the sign of each accumulated bit position.
-    *
-    * Computed by the native `SimHash64` Catalyst expression
-    * (`graft.functions.VectorExpressions`) — one fused pass over the token
-    * array per document, inside whole-stage codegen. (The pure-dataflow
-    * alternative explodes 64 bit-rows per token: a 64× row blowup through a
-    * shuffle for what is per-row arithmetic.) Near-dup candidate generation
-    * buckets fingerprints on 16-bit chunks (pigeonhole: Hamming distance ≤ 3
-    * ⇒ at least one of 4 chunks equal).
-    */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    spread(docs).select(
-      col(idCol),
-      graft.functions.VectorFunctions.simhash64(
-        TextFunctions.tokens(col(textCol))).as("simhash"))
-
-  /** SimHash near-dup pairs within a Hamming-distance budget, 16-bit-chunk
-    * candidate generation (pigeonhole: distance ≤ 3 ⇒ ≥1 of 4 chunks
-    * equal). Pair instancing is a chunk-keyed sort-merge self-join over
-    * the snapshotted chunk relation — the same r18 physical rewrite as
-    * [[bandBucketPairs]] (the prior `collect_list` member arrays routed
-    * the reduce through `ObjectHashAggregate`'s sort fallback, the r17
-    * ×100 scale-killer); the fingerprints and their chunks compute once.
-    */
-  def simhashNearDups(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    // the CHUNKED relation feeds both self-join sides: one checkpoint. Its
-    // 4-rows-per-doc blowup is id+fingerprint+two small ints — still
-    // signature-sized, never text.
-    val chunked = Stage.snapshotDF(
-      simhash(docs, idCol, textCol)
-        .select(col(idCol).as("__id"), col("simhash"),
-          explode(sequence(lit(0), lit(3))).as("chunk"))
-        .withColumn("ckey", expr("shiftright(simhash, chunk * 16) & 65535")))
-    chunked
-      .select(col("chunk"), col("ckey"),
-        col("__id").as("id_a"), col("simhash").as("sh_a"))
-      .join(chunked.select(col("chunk"), col("ckey"),
-        col("__id").as("id_b"), col("simhash").as("sh_b")),
-        Seq("chunk", "ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** SimHash near-dup pairs on FINALIZED-polyhash bit tests — the declared
-    * q44 gate form (the q53/q228-beside-q71 convention: the fused 64-bit
-    * xxhash kernel [[simhashNearDups]] stays spec-tested; THIS form is
-    * SQL-replayable end to end). A 60-bit fingerprint: token hash
+  /** SimHash near-dup pairs within a Hamming-distance budget, on
+    * finalized-polyhash bit tests so the oracle replays every step (the
+    * declared q44 form). A 60-bit fingerprint: token hash
     * h = finalized(polyhash(tok)), then four affine variants
     * h_j = (h·(2j+1) + (7j+3)) mod P each contribute 15 bit tests
     * (bits 0..14 — all well inside h_j < P < 2^30), each bit set by the
@@ -1091,11 +924,18 @@ object Dedup {
     * (not 64) keeps the fingerprint strictly positive so both engines
     * fold it in plain BIGINT arithmetic — no sign-bit cases. Candidate
     * generation pigeonholes on the four 15-bit variant words (Hamming
-    * ≤ 3 ⇒ at least one of 4 words equal — the production form's chunk
-    * argument verbatim), each word a 32k-bucket key; verification is
-    * `bit_count(xor)` on candidate pairs only.
+    * ≤ 3 ⇒ at least one of 4 words equal), each word a 32k-bucket key;
+    * verification is `bit_count(xor)` on candidate pairs only.
+    *
+    * Pair instancing is a chunk-keyed sort-merge self-join over the
+    * snapshotted chunk relation — the same r18 physical rewrite as
+    * [[bandBucketPairs]] (the prior `collect_list` member arrays routed
+    * the reduce through `ObjectHashAggregate`'s sort fallback, the r17
+    * ×100 scale-killer). The 60-vote fingerprint aggregate runs once,
+    * behind the snapshot; the chunked relation's 4-rows-per-doc blowup is
+    * id + fingerprint + two small ints — signature-sized, never text.
     */
-  def simhashNearDupsFinalized(
+  def simhashNearDups(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -1115,10 +955,7 @@ object Dedup {
       .select(col("__id"),
         (0 until 60).map(i => when(col(s"v$i") > 0, lit(1L << i)).otherwise(0L))
           .reduce(_ + _).as("simhash60"))
-    // same r18 join-based pair instancing as [[simhashNearDups]]: the
-    // 60-vote fingerprint aggregate runs once behind the snapshot, the
-    // chunk-keyed self-join replaces the object-agg member arrays; the
-    // snapshot sits on the chunked relation, as in [[simhashNearDups]]
+    // the CHUNKED relation feeds both self-join sides: one snapshot
     val chunked = Stage.snapshotDF(
       fp.select(col("__id"), col("simhash60"),
         explode(sequence(lit(0), lit(3))).as("chunk"))
@@ -1447,8 +1284,8 @@ object Dedup {
   /** Embedding cosine near-duplicates, blocked by a partition key so the
     * pairwise comparison is bounded per block (at 100 TB the block key would
     * be an LSH bucket or IVF centroid — here the dataset's `label` column
-    * doubles as the block, and `Similarity.lshBuckets` provides the
-    * hash-derived alternative). Blocks larger than `maxBucketSize` are
+    * doubles as the block, and [[embeddingNearDupsLsh]] blocks on
+    * `Similarity.lshBucketsDeterministic` instead). Blocks larger than `maxBucketSize` are
     * dropped before the self-join ([[capBuckets]]) or split into bounded
     * sub-blocks (`oversized = "subblock"`, [[subBlockBuckets]]) — either
     * way Σ block² can't go quadratic on a degenerate block.

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Why this exists beside the HLL surface (q71/q154/q178): Spark's HLL
   * uses xxhash64, which no oracle can replay, so those checks are
   * rows-only/±bound. The polynomial hash is SQL-expressible (the
-  * deterministic-minhash convention, `Dedup.minhashSignatures`), so THIS
+  * convention `Dedup.minhashCandidates` follows), so THIS
   * sketch is hash-checkable end to end — estimate, k-th hash, and error
   * — by an engine that shares nothing but the definition.
   *

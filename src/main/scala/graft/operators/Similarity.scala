@@ -17,9 +17,9 @@ import graft.functions.VectorFunctions
   *    the difference between scanning everything and scanning
   *    `nprobe/k`-th of it; the index (vector → centroid) persists as a
   *    partitioned table so repeated queries prune partitions.
-  *  - [[lshBuckets]]: random-hyperplane signs → bucket key, usable both for
-  *    ANN candidate generation and as the blocking key for
-  *    [[Dedup.embeddingNearDups]].
+  *  - [[lshBucketsDeterministic]] / [[lshBucketsHashed]]: hyperplane
+  *    signs → bucket key, usable both for ANN candidate generation and as
+  *    the blocking key for [[Dedup.embeddingNearDupsLsh]].
   *
   * All scoring is built-in expressions (`zip_with` + `aggregate`) in double
   * precision — codegen'd, no UDF.
@@ -547,18 +547,6 @@ object Similarity {
     }
   }
 
-  /** Random-hyperplane LSH bucket key: `numPlanes` fixed pseudo-random
-    * hyperplanes (seeded, deterministic), bucket = sign-bit string. Vectors
-    * in the same bucket are cosine-close candidates.
-    */
-  /** LSH bucket key from DETERMINISTIC integer hyperplanes —
-    * p(i)(j) = ((i·37 + j·17) mod 13) − 6 — so the bucketing is
-    * SQL-expressible and the oracle engine reproduces it bit-for-bit
-    * (`lshBuckets`' seeded Gaussian planes are the production choice but
-    * can only be rows-only checked). Bucket = Σ 2^i over planes with
-    * non-negative projection; each projection is one fused dot-product
-    * kernel call, all map-side.
-    */
   /** Shared prelude of [[knnJoinLsh]] and [[dbscan]]: deterministic LSH
     * bucketing → bucket cap → snapshot, projected as the two sides of the
     * in-bucket self-join. The snapshot barrier is load-bearing — the
@@ -581,6 +569,13 @@ object Similarity {
       b.select(col("lsh_bucket"), col("vec_id").as("neighbor"), col("v").as("vn")))
   }
 
+  /** LSH bucket key from DETERMINISTIC integer hyperplanes —
+    * p(i)(j) = ((i·37 + j·17) mod 13) − 6 — so the bucketing is
+    * SQL-expressible and the oracle engine reproduces it bit-for-bit.
+    * Vectors in the same bucket are cosine-close candidates. Bucket =
+    * Σ 2^i over planes with non-negative projection; each projection is
+    * one fused dot-product kernel call, all map-side.
+    */
   def lshBucketsDeterministic(embeddings: DataFrame, numPlanes: Int, dim: Int): DataFrame = {
     // same bound as lshBucketsHashed: at i = 63 the sign bit turns bucket
     // sums negative and at i >= 64 the JVM shift WRAPS (1L << 64 == 1), so
@@ -597,9 +592,7 @@ object Similarity {
   }
 
   /** LSH bucket key from HASH-DERIVED integer hyperplanes — the declared
-    * gate form beside [[lshBuckets]]' seeded Gaussian planes (the
-    * q228-beside-q71 convention: the seeded production form stays
-    * spec-tested; THIS form is SQL-replayable end to end). Plane
+    * q49 form, SQL-replayable end to end. Plane
     * coefficient p(i)(j) = finalized-polyhash("i:j") mod 2001 − 1000 —
     * the [[Kmv.finalizedHash]] affine finalizer over the oracle's own
     * polynomial string hash, so the coefficients are pseudo-random and
@@ -1309,20 +1302,5 @@ object Similarity {
         sum(when(col("__sil") < 0, 1L).otherwise(0L)).as("n_misfit"),
         round(avg(col("__own")), 4).as("avg_cohesion"))
       .orderBy(col(clusterCol))
-  }
-
-  def lshBuckets(embeddings: DataFrame, numPlanes: Int, dim: Int, seed: Long = 42L): DataFrame = {
-    val rng = new scala.util.Random(seed)
-    val planes: Seq[Seq[Double]] = Seq.fill(numPlanes)(Seq.fill(dim)(rng.nextGaussian()))
-    val planeArr = array(planes.map(p => array(p.map(lit): _*)): _*)
-    embeddings
-      .withColumn("__v", toDoubleArray(col("embedding")))
-      .withColumn("lsh_bucket",
-        aggregate(
-          zip_with(planeArr, sequence(lit(0L), lit(numPlanes - 1L)),
-            (p, i) => when(dot(col("__v"), p) >= 0,
-              pow(lit(2.0), i.cast("double")).cast("long")).otherwise(lit(0L))),
-          lit(0L), (acc, x) => acc + x))
-      .drop("__v")
   }
 }

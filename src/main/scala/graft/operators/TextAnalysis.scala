@@ -31,7 +31,7 @@ object TextAnalysis {
     val lex = broadcast(Lexicons.toDF("lex_lang", "lex_tok"))
     // explode_outer + null filter: avoids InferFiltersFromGenerate inlining
     // the tokenize pipeline into a pre-Generate filter (double tokenization
-    // per document — see Dedup.minhashSignatures).
+    // per document — see Dedup.shingleIndex).
     val toks = docs
       .select(col("doc_id"), explode_outer(TextFunctions.tokens(col("text"))).as("tok"))
       .filter(col("tok").isNotNull)

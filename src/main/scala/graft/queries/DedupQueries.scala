@@ -7,10 +7,10 @@ import graft.Tables
 import graft.operators.{Dedup, Similarity, Stage}
 
 /** Deduplication operator inventory over `documents` / `embeddings`.
-  * Exact dedup and n-gram Jaccard are hash-function-free → full DuckDB
-  * oracle. MinHash-LSH and SimHash depend on xxhash64 → rows-only driver
-  * check, with ScalaTest asserting their candidate sets against the exact
-  * Jaccard ground truth (DedupSpec).
+  * Exact dedup and n-gram Jaccard are hash-function-free; MinHash-LSH and
+  * SimHash hash with the SQL-expressible polynomial hash. Every one of
+  * them is checked against the DuckDB oracle, and DedupSpec checks the
+  * LSH candidate sets against the exact Jaccard ground truth.
   */
 object DedupQueries {
 
@@ -143,28 +143,23 @@ object DedupQueries {
   }
 
   /** q43 — MinHash-LSH candidate pairs on the FINALIZED polyhash
-    * ([[Dedup.minhashCandidatesFinalized]]), fully oracle-checked. Until
-    * round 16 this query declared the xxhash64 form
-    * ([[Dedup.minhashCandidates]], rows-only by necessity — DuckDB cannot
-    * replay xxhash64); the q49/q53 convention now applies: the declared
-    * gate form rides the SQL-replayable finalized polyhash (a BETTER
-    * affine family than q84's raw polyhash, whose near-monotone order
-    * correlates the signature elements), while the xxhash64 production
-    * form stays spec-tested (DedupSpec: candidates ⊇ all true J≥0.9
-    * pairs, for BOTH forms).
+    * ([[Dedup.minhashCandidates]] with `finalized = true`), fully
+    * oracle-checked: a better affine family than q84's raw polyhash,
+    * whose near-monotone order correlates the signature elements.
+    * DedupSpec checks that the candidates cover all true J≥0.9 pairs.
     */
   def q43_minhash_lsh: Q = (s, dir) => {
-    Dedup.minhashCandidatesFinalized(Tables.documents(s, dir), "doc_id", "text")
+    Dedup.minhashCandidates(
+        Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3),
+        finalized = true)
       .orderBy("id_a", "id_b")
   }
 
-  /** q44 — SimHash near-dup pairs on FINALIZED-polyhash bit tests
-    * ([[Dedup.simhashNearDupsFinalized]]), fully oracle-checked; the
-    * fused 64-bit xxhash kernel form ([[Dedup.simhashNearDups]]) stays
-    * spec-tested (the q43 note's convention, same round).
+  /** q44 — SimHash near-dup pairs on finalized-polyhash bit tests
+    * ([[Dedup.simhashNearDups]]), fully oracle-checked.
     */
   def q44_simhash: Q = (s, dir) => {
-    Dedup.simhashNearDupsFinalized(Tables.documents(s, dir), "doc_id", "text",
+    Dedup.simhashNearDups(Tables.documents(s, dir), "doc_id", "text",
         maxHamming = 3)
       .orderBy("id_a", "id_b")
   }
@@ -485,12 +480,12 @@ object DedupQueries {
         shingleK = 3, threshold = 0.6),
       "id_a", "id_b")
 
-  /** q84 — MinHash-LSH candidates with the deterministic polynomial hash:
-    * the q43 pipeline made fully oracle-checkable (signature minima, band
-    * keys, capped buckets and pair expansion all reproduced in SQL).
+  /** q84 — MinHash-LSH candidates on the raw polynomial hash (q43
+    * without the finalizer), fully oracle-checked: signature minima, band
+    * keys, capped buckets and pair expansion all reproduced in SQL.
     */
   def q84_minhash_det: Q = (s, dir) => {
-    Dedup.minhashCandidatesDeterministic(Tables.documents(s, dir), "doc_id", "text")
+    Dedup.minhashCandidates(Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3))
       .orderBy("id_a", "id_b")
   }
 
@@ -507,7 +502,7 @@ object DedupQueries {
     // index — the corpus is shingled once for the whole pipeline
     val sh = Dedup.shingleIndex(Tables.documents(s, dir), "doc_id", "text", 3)
       .transform(Stage.snapshotDF)
-    Dedup.jaccardVerify(Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
+    Dedup.jaccardVerify(Dedup.minhashCandidates(sh), sh, threshold = 0.6)
       .orderBy("id_a", "id_b")
   }
 
@@ -770,7 +765,7 @@ object DedupQueries {
       "doc_id", "text", 3)
       .transform(Stage.snapshotDF)
     val exact = Dedup.jaccardPairsPrefixFrom(sh, threshold = 0.6)
-    val cand = Dedup.minhashCandidatesDeterministicFrom(sh)
+    val cand = Dedup.minhashCandidates(sh)
     Dedup.candidateRecallAudit(exact, cand)
   }
 
@@ -1169,7 +1164,7 @@ object DedupQueries {
       ORDER BY 1, 2""",
     // finalized token hash -> 4 affine variants x 15 bit-test majority
     // votes -> 60-bit fingerprint -> 15-bit-word pigeonhole -> xor
-    // bit_count verify, mirroring Dedup.simhashNearDupsFinalized
+    // bit_count verify, mirroring Dedup.simhashNearDups
     "q44_simhash" -> {
       val votes = (for (j <- 0 until 4; b <- 0 until 15) yield
         s"sum(((((h * ${2 * j + 1} + ${7 * j + 3}) % 1000000007) >> $b) & 1) * 2 - 1) AS v${j * 15 + b}")

@@ -273,7 +273,7 @@ object RelationalQueries {
     Tables.documents(s, dir)
       // explode_outer: keeps InferFiltersFromGenerate from re-tokenizing each
       // row inside an inferred `size(tokens(text)) > 0` filter (see
-      // Dedup.minhashSignatures); null rows from empty arrays filtered cheaply
+      // Dedup.shingleIndex); null rows from empty arrays filtered cheaply
       .select(explode_outer(TextFunctions.tokens(col("text"))).as("token"))
       .filter(col("token").isNotNull)
       .groupBy("token")

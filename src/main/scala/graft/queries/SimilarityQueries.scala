@@ -307,14 +307,10 @@ object SimilarityQueries {
   /** q49 — LSH bucket histogram from HASH-DERIVED integer hyperplanes
     * ([[Similarity.lshBucketsHashed]]): the candidate-generation
     * structure for ANN and blocked near-dup, fully oracle-checked.
-    * Until round 15 this query declared the seeded-Gaussian form
-    * ([[Similarity.lshBuckets]], rows-only by necessity — the planes
-    * are JVM-RNG-dependent); the q228-beside-q71 convention now
-    * applies: the declared gate form derives each plane coefficient
-    * from the finalized polyhash (pseudo-random, decorrelated — unlike
-    * q83's structured linear grid) and tests every sign in exact Long
-    * arithmetic over the 1e-6-quantized embedding, while the Gaussian
-    * production form stays spec-tested (SimilaritySpec).
+    * Each plane coefficient derives from the finalized polyhash
+    * (pseudo-random, decorrelated — unlike q83's structured linear grid)
+    * and every sign is tested in exact Long arithmetic over the
+    * 1e-6-quantized embedding.
     */
   def q49_lsh_buckets: Q = (s, dir) => {
     Similarity.lshBucketsHashed(Tables.embeddings(s, dir), numPlanes = 8, dim = 64)
@@ -324,9 +320,8 @@ object SimilarityQueries {
   }
 
   /** q83 — LSH bucket histogram with DETERMINISTIC integer hyperplanes:
-    * the same candidate-generation structure as q49 but SQL-expressible, so
-    * the bucketing itself is oracle-checked (q49's Gaussian planes stay the
-    * production form).
+    * the same candidate-generation structure as q49 on a structured
+    * linear grid of planes, oracle-checked the same way.
     */
   def q83_lsh_det: Q = (s, dir) => {
     Similarity.lshBucketsDeterministic(Tables.embeddings(s, dir), numPlanes = 8, dim = 64)

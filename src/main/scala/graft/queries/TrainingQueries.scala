@@ -482,7 +482,7 @@ object TrainingQueries {
     val sh = graft.operators.Dedup.shingleIndex(docs, "doc_id", "text", 3)
       .transform(Stage.snapshotDF)
     val pairs = graft.operators.Dedup.jaccardVerify(
-      graft.operators.Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
+      graft.operators.Dedup.minhashCandidates(sh), sh, threshold = 0.6)
     val dupes = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id"))
@@ -570,7 +570,7 @@ object TrainingQueries {
     val sh = graft.operators.Dedup.shingleIndex(docs, "doc_id", "text", 3)
       .transform(Stage.snapshotDF)
     val pairs = graft.operators.Dedup.jaccardVerify(
-      graft.operators.Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
+      graft.operators.Dedup.minhashCandidates(sh), sh, threshold = 0.6)
     val comp = graft.operators.Dedup.connectedComponents(pairs, "id_a", "id_b")
     val h = graft.functions.StringFunctions.polyHash(col("component").cast("string")) % 10
     docs.join(comp, docs("doc_id") === comp("node"), "left")

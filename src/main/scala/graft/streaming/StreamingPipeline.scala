@@ -110,29 +110,4 @@ object StreamingPipeline {
     docs.groupByKey(_._1)
       .transformWithState(new FirstSeenGate(ttl), mode, OutputMode.Append())
   }
-
-  /** Custom keyed state via flatMapGroupsWithState: per-document annotation
-    * accumulator that emits a running total each micro-batch — the pattern
-    * for state Spark's built-in windows can't express (the reference keeps
-    * this state in the SINK and re-queries it per doc,
-    * `ingester/annotations_indexer.py:80-101`; here it lives in the state
-    * store, checkpointed, no sink round-trips).
-    */
-  case class DocCount(doc_id: Long, total: Long)
-
-  def runningAnnotationCounts(
-      anns: org.apache.spark.sql.Dataset[(Long, String)]): org.apache.spark.sql.Dataset[DocCount] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = anns.sparkSession
-    import spark.implicits._
-    anns.groupByKey(_._1)
-      .flatMapGroupsWithState[Long, DocCount](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (docId: Long, batch: Iterator[(Long, String)], state: GroupState[Long]) =>
-          val prev = state.getOption.getOrElse(0L)
-          val total = prev + batch.size
-          state.update(total)
-          Iterator(DocCount(docId, total))
-      }
-  }
 }

@@ -29,7 +29,7 @@ class BenchSkewSpec extends SparkSuite {
     * reported). A healthy cap on this corpus yields nonzero drops.
     */
   private def cappedRun(cap: Int): (Set[(Long, Long)], Long) = {
-    val df = Dedup.minhashCandidatesDeterministic(docs, "doc_id", "text",
+    val df = Dedup.minhashCandidates(Dedup.shingleIndex(docs, "doc_id", "text", 3),
       maxBucketSize = cap)
     val pairs = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val drops = df.queryExecution.observedMetrics.collect {

@@ -173,20 +173,10 @@ class DedupSpec extends SparkSuite {
     }
   }
 
-  test("minhash LSH candidates cover all true J>=0.9 pairs (no false negatives at high sim)") {
-    val truth = Dedup.jaccardPairs(corpus, "doc_id", "text", shingleK = 3, threshold = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(truth.nonEmpty)
-    val cand = Dedup.minhashCandidates(corpus, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val missed = truth -- cand
-    assert(missed.isEmpty, s"LSH missed high-similarity pairs: $missed")
-  }
-
   test("deterministic minhash LSH also covers all true J>=0.9 pairs") {
     val truth = Dedup.jaccardPairs(corpus, "doc_id", "text", shingleK = 3, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cand = Dedup.minhashCandidatesDeterministic(corpus, "doc_id", "text")
+    val cand = Dedup.minhashCandidates(Dedup.shingleIndex(corpus, "doc_id", "text", 3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = truth -- cand
     assert(missed.isEmpty, s"deterministic LSH missed high-similarity pairs: $missed")
@@ -196,7 +186,8 @@ class DedupSpec extends SparkSuite {
     val truth = Dedup.jaccardPairs(corpus, "doc_id", "text", shingleK = 3, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(truth.nonEmpty)
-    val cand = Dedup.minhashCandidatesFinalized(corpus, "doc_id", "text")
+    val cand = Dedup.minhashCandidates(
+        Dedup.shingleIndex(corpus, "doc_id", "text", 3), finalized = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = truth -- cand
     assert(missed.isEmpty, s"finalized LSH missed high-similarity pairs: $missed")
@@ -206,7 +197,7 @@ class DedupSpec extends SparkSuite {
 
   test("minhash LSH candidate set is not the all-pairs set (it actually prunes)") {
     val n = corpus.count()
-    val cand = Dedup.minhashCandidates(corpus, "doc_id", "text").count()
+    val cand = Dedup.minhashCandidates(Dedup.shingleIndex(corpus, "doc_id", "text", 3)).count()
     assert(cand < n * (n - 1) / 4, s"candidates $cand ≈ all pairs — LSH not pruning")
   }
 
@@ -214,7 +205,7 @@ class DedupSpec extends SparkSuite {
       "complete at J>=0.9 (the scale path loses nothing it promises to keep)") {
     val exact = Dedup.jaccardPairs(corpus, "doc_id", "text", shingleK = 3, threshold = 0.6)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val cands = Dedup.minhashCandidatesDeterministic(corpus, "doc_id", "text")
+    val cands = Dedup.minhashCandidates(Dedup.shingleIndex(corpus, "doc_id", "text", 3))
     val verified = Dedup.jaccardVerify(cands, corpus, "doc_id", "text",
         shingleK = 3, threshold = 0.6)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -286,19 +277,8 @@ class DedupSpec extends SparkSuite {
     assert(single.subsetOf(multi), "multi-probe must cover the exact-bucket result")
   }
 
-  test("simhash: identical texts get identical fingerprints; near-dups within hamming 3") {
-    val fp = Dedup.simhash(corpus, "doc_id", "text")
-    val exactPair = fp.as("a").join(fp.as("b"),
-        $"a.doc_id" === 0L && $"b.doc_id" === 100000L)
-      .select($"a.simhash" === $"b.simhash").as[Boolean].head()
-    assert(exactPair, "exact dup must have equal simhash")
-    val nd = Dedup.simhashNearDups(corpus, "doc_id", "text", maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(nd.contains((0L, 100000L)))
-  }
-
   test("finalized simhash (the declared q44 form): exact dup at hamming 0, near-dup found, pairs canonical") {
-    val nd = Dedup.simhashNearDupsFinalized(corpus, "doc_id", "text", maxHamming = 3)
+    val nd = Dedup.simhashNearDups(corpus, "doc_id", "text", maxHamming = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
     val byPair = nd.toMap
     // doc 0's planted copy is text-identical -> identical fingerprint
@@ -377,7 +357,7 @@ class DedupSpec extends SparkSuite {
     // the construction (e.g. against regressing to a per-doc hash)
     val sh = Dedup.shingleIndex(corpus, "doc_id", "text", 3).localCheckpoint()
     val pairs = Dedup.jaccardVerify(
-      Dedup.minhashCandidatesDeterministicFrom(sh), sh, threshold = 0.6)
+      Dedup.minhashCandidates(sh), sh, threshold = 0.6)
     assert(pairs.count() > 0, "planted corpus must contain near-dups")
     val comp = Dedup.connectedComponents(pairs, "id_a", "id_b")
     val h = graft.functions.StringFunctions.polyHash($"component".cast("string")) % 10
@@ -454,7 +434,7 @@ class DedupSpec extends SparkSuite {
       "doc_id", "text", 3).transform(graft.operators.Stage.snapshotDF)
     val exact = Dedup.jaccardPairsPrefixFrom(sh, threshold = 0.6)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cand = Dedup.minhashCandidatesDeterministicFrom(sh)
+    val cand = Dedup.minhashCandidates(sh)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val row = SparkEntry.queries("q111_lsh_recall_audit")(spark, sfDir).collect().head
     assert(row.getLong(0) == exact.size.toLong, s"n_exact: $row vs ${exact.size}")

@@ -24,6 +24,21 @@ class ExtensionsSpec extends SparkSuite {
     assert(h1 == h2)
   }
 
+  test("the extension class injects exactly the functions register installs") {
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    GraftExtensions.register(spark)
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injected.size == 9 && injected.distinct.size == injected.size, injected)
+    assert(injected.toSet == registered)
+  }
+
   test("wrong-typed input to graft_* functions fails at analysis, not runtime") {
     GraftExtensions.register(spark)
     val e1 = intercept[Exception] {

@@ -109,16 +109,24 @@ class PipelineSpec extends SparkSuite {
   test("F2 bloom reroute ≡ plain anti-join, bit-exact, at any bloom size") {
     val docs = Tables.documents(spark, sfDir)
     val sink = docs.filter($"doc_id" % 3 === 0).select($"doc_id".as("meta_doc_id"))
-    val exact = AnnotationPipeline.filterAlreadyProcessed(docs, sink)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    // properly sized bloom AND a pathologically tiny one (64 bits for ~20
-    // ids → dense false positives): both must reroute, never change results
-    for (items <- Seq(100000L, 1L)) {
-      val got = AnnotationPipeline.filterAlreadyProcessedBloom(
-          docs, sink, expectedItems = items, fpp = 0.5)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      assert(got == exact, s"expectedItems=$items")
+    // one more probe with a null doc_id row: the anti-join keeps it (null
+    // never matches), so whichever branch the bloom routes it to must too
+    val withNullId = docs.unionByName(
+      docs.limit(1).withColumn("doc_id", lit(null).cast("long")))
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+      df.select("doc_id").as[Option[Long]].collect().toSeq.sortBy(_.getOrElse(Long.MinValue))
+    for (probe <- Seq(docs, withNullId)) {
+      val exact = ids(AnnotationPipeline.filterAlreadyProcessed(probe, sink))
+      // properly sized bloom AND a pathologically tiny one (64 bits for ~20
+      // ids → dense false positives): both must reroute, never change results
+      for (items <- Seq(100000L, 1L)) {
+        val got = ids(AnnotationPipeline.filterAlreadyProcessedBloom(
+          probe, sink, expectedItems = items, fpp = 0.5))
+        assert(got == exact, s"expectedItems=$items")
+      }
     }
+    assert(ids(AnnotationPipeline.filterAlreadyProcessedBloom(withNullId, sink))
+      .count(_.isEmpty) == 1, "the null doc_id row must survive the reroute")
   }
 
   test("F2 bloom reroute: empty processed side passes everything through") {

@@ -350,7 +350,7 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("LSH buckets partition the corpus (every vector in exactly one bucket)") {
-    val b = Similarity.lshBuckets(emb, numPlanes = 8, dim = 64)
+    val b = Similarity.lshBucketsDeterministic(emb, numPlanes = 8, dim = 64)
     assert(b.count() == emb.count())
     val nBuckets = b.select("lsh_bucket").distinct().count()
     assert(nBuckets > 1 && nBuckets <= 256)

@@ -92,8 +92,8 @@ class SkewFixtureSpec extends SparkSuite {
   test("the text-side caps are observable too (no-silent-caps: band cap, posting cap)") {
     // band cap: with a cap below the hot cluster's bucket sizes, the
     // aggregation pass must report dropped memberships and buckets
-    val cands = Dedup.minhashCandidatesDeterministic(
-      docs, "doc_id", "text", maxBucketSize = 50)
+    val cands = Dedup.minhashCandidates(
+      Dedup.shingleIndex(docs, "doc_id", "text", 3), maxBucketSize = 50)
     cands.collect() // observedMetrics live on THIS plan's execution
     val band = cands.queryExecution.observedMetrics
       .collect { case (n, r) if n.startsWith("graft.lshBandCap.") => r }
@@ -117,16 +117,18 @@ class SkewFixtureSpec extends SparkSuite {
   }
 
   test("AQE total-collapse caveat: an all-dropped result loses its observe metric (pinned)") {
-    // xxhash 8-row bands at this J admit only the giant cluster, so a cap
-    // below its bucket sizes drops EVERYTHING → 0 rows. AQE's empty-
-    // relation propagation then removes the (already-executed)
-    // CollectMetrics stage from the final plan — the metric is lost even
-    // though the drop happened. If a Spark upgrade starts preserving it,
-    // this test flips and the scaladoc caveat can be retired.
+    // the default 8 hashes in 4 bands put the 160-doc giant cluster into
+    // buckets far above 50 (its open run pairs all 160·159/2 members) and
+    // leave no other bucket with two members, so a cap of 50 drops
+    // EVERYTHING → 0 rows. AQE's empty-relation propagation then removes
+    // the (already-executed) CollectMetrics stage from the final plan — the
+    // metric is lost even though the drop happened. If a Spark upgrade
+    // starts preserving it, this test flips and the scaladoc caveat can be
+    // retired.
     // Hot band only: the band-9 cold twins form size-2 buckets that
     // survive any cap, which would defeat the all-dropped premise here.
-    val hotOnly = docs.filter($"doc_id" % 10 < 4)
-    val all = Dedup.minhashCandidates(hotOnly, "doc_id", "text", maxBucketSize = 50)
+    val hotIndex = Dedup.shingleIndex(docs.filter($"doc_id" % 10 < 4), "doc_id", "text", 3)
+    val all = Dedup.minhashCandidates(hotIndex, maxBucketSize = 50)
     assert(all.collect().isEmpty, "the cap must swallow the whole result here")
     assert(all.queryExecution.observedMetrics.isEmpty,
       "AQE empty-propagation currently discards the collapsed stage's metric")
@@ -134,7 +136,7 @@ class SkewFixtureSpec extends SparkSuite {
     // plan-collapse, not the cap instrumentation
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val noAqe = Dedup.minhashCandidates(hotOnly, "doc_id", "text", maxBucketSize = 50)
+      val noAqe = Dedup.minhashCandidates(hotIndex, maxBucketSize = 50)
       assert(noAqe.collect().isEmpty)
       val m = noAqe.queryExecution.observedMetrics
         .collect { case (n, r) if n.startsWith("graft.lshBandCap.") => r }
